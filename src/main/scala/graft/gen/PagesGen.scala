@@ -17,7 +17,7 @@ import java.sql.Timestamp
 object PagesGen {
 
   /** Bump whenever generated output changes — cache dirs (Bench,
-    * BenchProbe) embed it so stale corpora are never silently re-timed.
+    * jobbench) embed it so stale corpora are never silently re-timed.
     */
   final val CorpusVersion = "v2"
 

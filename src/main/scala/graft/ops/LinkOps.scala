@@ -613,9 +613,9 @@ object LinkOps {
 
   /** Per-host crawl-politeness audit over the fetch event log: sort
     * each host's fetches by timestamp, measure inter-request gaps, and
-    * count violations of the 5-second courtesy floor (RFC 9309 leaves
-    * crawl-delay advisory; 5 s is the conservative default the frontier
-    * scheduler plans for — this is the a-posteriori compliance check
+    * count violations of a 600-second (10-minute) courtesy floor,
+    * `gap_us < 600000000` in both engines (RFC 9309 leaves crawl-delay
+    * advisory — this is the a-posteriori compliance check
     * against what the fetcher actually did). Gaps are exact integer
     * microseconds (`unix_micros`), ties in the sort broken by event id,
     * so the oracle replays identically.

@@ -11,6 +11,11 @@ import org.apache.spark.sql.types._
   * `Trigger.AvailableNow` — same kernel, same plan, incremental source.
   * The batch-with-resume ledger (ExtractJob) stays the primary shape; this
   * is the streaming entry for continuously-landing crawl data.
+  *
+  * Every oracle-gated `q_stream_*` query runs through one harness,
+  * [[replay]]: each caller supplies its slices, its plan and its sink;
+  * staging, the AvailableNow drain, materialization and cleanup live
+  * there once.
   */
 object StreamingOps {
 
@@ -25,14 +30,13 @@ object StreamingOps {
 
   /** Stage one micro-batch increment: write `df` as a single parquet
     * file `name.parquet` under `destDir` (scratch under `stageRoot`),
-    * pin its mtime — the file source picks oldest-mtime first — and
-    * return the staged path. One shared implementation for every
-    * streaming probe; directory streams are CLOSED (a leaked
+    * pin its mtime — the file source picks oldest-mtime first. Called
+    * only by [[replay]]; directory streams are CLOSED (a leaked
     * `Files.list` handle per staged file adds up across a
     * full-registry run).
     */
   private def stageSliceFile(df: DataFrame, stageRoot: java.nio.file.Path,
-      destDir: java.nio.file.Path, name: String, mtimeMs: Long): java.nio.file.Path = {
+      destDir: java.nio.file.Path, name: String, mtimeMs: Long): Unit = {
     val tmp = stageRoot.resolve(s"tmp_$name")
     df.coalesce(1).write.parquet(tmp.toString)
     def withList[T](d: java.nio.file.Path)(f: java.util.stream.Stream[java.nio.file.Path] => T): T = {
@@ -46,7 +50,6 @@ object StreamingOps {
     java.nio.file.Files.deleteIfExists(tmp)
     java.nio.file.Files.setLastModifiedTime(dest,
       java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    dest
   }
 
   /** Recursive temp-tree delete for the staging/checkpoint scratch a
@@ -61,6 +64,88 @@ object StreamingOps {
         .forEach(java.nio.file.Files.deleteIfExists(_))
       finally st.close()
     }
+  }
+
+  /** Where a [[replay]] drains: a memory-sink view in output `mode`, or
+    * a `foreachBatch` writer that applies each micro-batch to `out` (a
+    * scratch dir under the stage dir) and whose final state `read(out)`
+    * returns.
+    */
+  private[graft] sealed trait Sink
+  private[graft] final case class Memory(mode: String = "append") extends Sink
+  private[graft] final case class ForeachBatch(write: (DataFrame, String) => Unit,
+      read: String => DataFrame) extends Sink
+
+  /** A drained [[replay]]: its materialized output and the query's
+    * progress reports.
+    */
+  private[graft] final case class Replayed(rows: DataFrame,
+      progress: Array[org.apache.spark.sql.streaming.StreamingQueryProgress])
+
+  /** The one AvailableNow replay harness behind every oracle-gated
+    * streaming query. Each entry of `sources` is one file-source stream:
+    * its slices are staged in order as one parquet file each (mtimes
+    * rising in slice order), and the stream reads them one file per
+    * trigger with the staged files' own schema. `plan` turns the source
+    * streams into the query, which drains into `sink`; its checkpoint
+    * lives under the stage dir. The result is materialized
+    * (`localCheckpoint`) before the sink view is dropped and the stage
+    * dir removed, so neither outlives the call, even when the query
+    * fails.
+    */
+  private[graft] def replay(spark: SparkSession, name: String,
+      sources: Seq[Seq[DataFrame]], sink: Sink = Memory())(
+      plan: Seq[DataFrame] => DataFrame): Replayed = {
+    import org.apache.spark.sql.streaming.Trigger
+    val stage = java.nio.file.Files.createTempDirectory(s"stream_${name}_src")
+    val view = s"stream_${name}_${System.nanoTime()}"
+    val out = stage.resolve("out").toString
+    val base = System.currentTimeMillis() - 3600 * 1000L
+    try {
+      val streams = sources.zipWithIndex.map { case (slices, k) =>
+        val dir = java.nio.file.Files.createDirectory(stage.resolve(s"src$k"))
+        slices.zipWithIndex.foreach { case (df, i) =>
+          stageSliceFile(df, stage, dir, f"$k-$i%03d", base + i * 10000L)
+        }
+        spark.readStream.schema(spark.read.parquet(dir.toString).schema)
+          .option("maxFilesPerTrigger", "1")
+          .parquet(dir.toString)
+      }
+      val writer = plan(streams).writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", stage.resolve("ckpt").toString)
+      val q = (sink match {
+        case Memory(mode) => writer.format("memory").queryName(view).outputMode(mode)
+        case ForeachBatch(write, _) =>
+          writer.foreachBatch((b: DataFrame, _: Long) => write(b, out))
+      }).start()
+      try q.awaitTermination() finally q.stop()
+      val rows = sink match {
+        case Memory(_) => spark.table(view)
+        case ForeachBatch(_, read) => read(out)
+      }
+      Replayed(rows.localCheckpoint(true), q.recentProgress)
+    } finally {
+      spark.catalog.dropTempView(view)
+      rmTree(stage) // staged slices, checkpoint and sink scratch together
+    }
+  }
+
+  /** `n` strict time slices of `df` on its `ts_us` column: equal-span
+    * `[lo, hi)` ranges from the minimum, the last one open-ended, so
+    * every row of slice k+1 is at or after every row of slice k. Also
+    * returns the maximum `ts_us`, past which callers place sentinels.
+    */
+  private def timeSlices(df: DataFrame, n: Int): (Seq[DataFrame], Long) = {
+    val r = df.agg(min(col("ts_us")), max(col("ts_us"))).head()
+    val (minUs, maxUs) = (r.getLong(0), r.getLong(1))
+    val spanUs = math.max(1L, (maxUs - minUs) / n + 1)
+    val slices = (0 until n).map { i =>
+      val lo = minUs + i * spanUs
+      val hi = if (i == n - 1) Long.MaxValue else lo + spanUs
+      df.filter(col("ts_us") >= lo && col("ts_us") < hi)
+    }
+    (slices, maxUs)
   }
 
   /** File-source stream of pages (Iceberg-snapshot stand-in: each new file
@@ -167,34 +252,17 @@ object StreamingOps {
     * incremental engine computes the same answer as the batch plan on the
     * same input — the Iceberg-snapshot tailing story end-to-end.
     */
-  def streamHourlyEvents(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+  def streamHourlyEvents(spark: SparkSession, dir: String): DataFrame =
     // the testdata table is a single read-only FILE; the file-stream
     // source monitors a DIRECTORY (each new file = one increment), so
-    // stage the file into a temp dir — the same landing-dir shape a
-    // continuously-written crawl table has
-    val stage = java.nio.file.Files.createTempDirectory("stream_hourly_src")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(path),
-      stage.resolve("events-000.parquet"))
-    val src = spark.readStream.schema(schema).parquet(stage.toString)
-    val agg = src
-      .groupBy(window(col("ts").cast("timestamp"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
-    val name = s"stream_hourly_${System.nanoTime()}"
-    val q = agg.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally { // deleteOnExit can't remove a non-empty dir — clean up now
-      java.nio.file.Files.deleteIfExists(stage.resolve("events-000.parquet"))
-      java.nio.file.Files.deleteIfExists(stage)
-    }
-    spark.table(name)
+    // the table lands as one staged increment — the same landing-dir
+    // shape a continuously-written crawl table has
+    replay(spark, "hourly", Seq(Seq(spark.read.parquet(s"$dir/events.parquet"))),
+      Memory("complete")) { case Seq(src) =>
+      src.groupBy(window(col("ts").cast("timestamp"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("sum_value"))
+    }.rows
       .selectExpr("unix_micros(window.start) as window_us", "event_type", "n", "sum_value")
-  }
 
   val streamHourlyEventsSql: String =
     """SELECT epoch_us(date_trunc('hour', ts)) AS window_us, event_type,
@@ -227,41 +295,19 @@ object StreamingOps {
     */
   def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id",
         "cast(event_id as long) as event_id",
         "unix_micros(cast(ts as timestamp)) as ts_us",
         "cast(ts as timestamp) as ets")
-    val (minUs, maxUs) = ev.agg(min(col("ts_us")), max(col("ts_us")))
-      .as[(Long, Long)].first()
-    val nSlices = 4
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_sess_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        stageSlice(ev.filter(col("ts_us") >= lo && col("ts_us") < hi),
-          f"slice-$i%03d", base + i * 10000L)
-      }
-      // watermark-advancing sentinel, filtered back out of the result
-      stageSlice(
-        spark.range(1).selectExpr("-1L as user_id", "-1L as event_id",
-          s"${maxUs + 30L * 86400 * 1000000} as ts_us",
-          s"timestamp_micros(${maxUs + 30L * 86400 * 1000000}) as ets"),
-        "slice-zzz", base + nSlices * 10000L)
-      val src = spark.readStream
-        .schema(StructType(Seq(
-          StructField("user_id", LongType), StructField("event_id", LongType),
-          StructField("ts_us", LongType), StructField("ets", TimestampType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-      val sessions = src
+    val (slices, maxUs) = timeSlices(ev, 4)
+    // watermark-advancing sentinel, filtered back out of the result
+    val sentinel = spark.range(1).selectExpr("-1L as user_id", "-1L as event_id",
+      s"${maxUs + 30L * 86400 * 1000000} as ts_us",
+      s"timestamp_micros(${maxUs + 30L * 86400 * 1000000}) as ets")
+    replay(spark, "sessions", Seq(slices :+ sentinel)) { case Seq(src) =>
+      src
         .withWatermark("ets", "0 seconds")
         .as[EventIn]
         .groupByKey(_.user_id)
@@ -288,18 +334,9 @@ object StreamingOps {
               st.setTimeoutTimestamp(cur.last_us / 1000 + SessGapUs / 1000 + 1)
               out.result().iterator
             }
-        }
-      val name = s"stream_sessions_${System.nanoTime()}"
-      val q = sessions.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).filter(col("user_id") >= 0)
-        .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
-    } finally {
-      rmTree(stage)
-    }
+        }.toDF()
+    }.rows.filter(col("user_id") >= 0)
+      .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
   }
 
   val streamSessionizeSql: String =
@@ -345,35 +382,14 @@ object StreamingOps {
     */
   def streamHostSlots(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id % 8 as long) as host_id",
         "cast(event_id as long) as event_id",
         "unix_micros(cast(ts as timestamp)) as ts_us",
         "cast(ts as timestamp) as ets")
-    val (minUs, maxUs) = ev.agg(min(col("ts_us")), max(col("ts_us")))
-      .as[(Long, Long)].first()
-    val nSlices = 4
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_slots_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        stageSlice(ev.filter(col("ts_us") >= lo && col("ts_us") < hi),
-          f"slice-$i%03d", base + i * 10000L)
-      }
-      val src = spark.readStream
-        .schema(StructType(Seq(
-          StructField("host_id", LongType), StructField("event_id", LongType),
-          StructField("ts_us", LongType), StructField("ets", TimestampType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-      val slots = src
+    replay(spark, "slots", Seq(timeSlices(ev, 4)._1)) { case Seq(src) =>
+      src
         .as[FetchIn]
         .groupByKey(_.host_id)
         .flatMapGroupsWithState[HostState, SlotRow](
@@ -389,18 +405,8 @@ object StreamingOps {
             }
             st.update(s)
             out.iterator
-        }
-      val name = s"stream_slots_${System.nanoTime()}"
-      val q = slots.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-        .select(col("host_id"), col("event_id"), col("slot"), col("sched_us"))
-    } finally {
-      rmTree(stage)
-    }
+        }.toDF()
+    }.rows.select(col("host_id"), col("event_id"), col("slot"), col("sched_us"))
   }
 
   val streamHostSlotsSql: String =
@@ -430,46 +436,13 @@ object StreamingOps {
     * re-admit late duplicates here and break exactness).
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id", "event_type",
         "unix_micros(cast(ts as timestamp)) as ts_us")
-    val (minUs, maxUs) = {
-      val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    val nSlices = 4
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_dedup_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        stageSlice(ev.filter(col("ts_us") >= lo && col("ts_us") < hi),
-          f"slice-$i%03d", base + i * 10000L)
-      }
-      val src = spark.readStream
-        .schema(StructType(Seq(
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("ts_us", LongType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-      val deduped = src.select(col("user_id"), col("event_type"))
+    replay(spark, "dedup", Seq(timeSlices(ev, 4)._1)) { case Seq(src) =>
+      src.select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-      val name = s"stream_dedup_${System.nanoTime()}"
-      val q = deduped.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-    } finally {
-      rmTree(stage)
-    }
+    }.rows
   }
 
   val streamDedupSql: String =
@@ -493,52 +466,31 @@ object StreamingOps {
     * or re-admits in-horizon duplicates both fail the hash.
     */
   def streamDedupEvict(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val t0 = 1700000000000000L // fixed epoch base, microseconds
     val spanUs = 60000000L // one-minute slices
     val keys = spark.read.parquet(s"$dir/documents.parquet")
       .selectExpr("cast(doc_id % 200 as long) as k").distinct()
       .as[Long].collect().sorted
-    val stage = java.nio.file.Files.createTempDirectory("stream_evict_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until 4).foreach { i =>
-        val onTime = keys.filter(_ / 50 == i).flatMap { k =>
-          val ts = t0 + i * spanUs + (k % 50) * 1000000L
-          // in-horizon duplicate (1 s later, same slice): suppressed
-          if (k % 7 == 1) Seq((k, ts), (k, ts + 1000000L)) else Seq((k, ts))
-        }
-        val replants =
-          if (i == 3) keys.filter(k => k < 50 && k % 5 == 0)
-            .map(k => (k, t0 + 3 * spanUs + (k % 50) * 1000000L))
-          else Array.empty[(Long, Long)]
-        staged += stageSliceFile(
-          (onTime ++ replants).toSeq.toDF("user_id", "ts_us")
-            .selectExpr("user_id", "timestamp_micros(ts_us) as ts"),
-          stage, stage, f"evict-$i%03d", base + i * 10000L)
+    val slices = (0 until 4).map { i =>
+      val onTime = keys.filter(_ / 50 == i).flatMap { k =>
+        val ts = t0 + i * spanUs + (k % 50) * 1000000L
+        // in-horizon duplicate (1 s later, same slice): suppressed
+        if (k % 7 == 1) Seq((k, ts), (k, ts + 1000000L)) else Seq((k, ts))
       }
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
-      val deduped = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .withWatermark("ts", "10 seconds")
-        .dropDuplicatesWithinWatermark("user_id")
-      val name = s"stream_evict_${System.nanoTime()}"
-      val q = deduped.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name)
-        .groupBy("user_id")
-        .agg(count(lit(1)).cast("long").as("n_emitted"))
-        .localCheckpoint(true)
-    } finally {
-      rmTree(stage)
+      val replants =
+        if (i == 3) keys.filter(k => k < 50 && k % 5 == 0)
+          .map(k => (k, t0 + 3 * spanUs + (k % 50) * 1000000L))
+        else Array.empty[(Long, Long)]
+      (onTime ++ replants).toSeq.toDF("user_id", "ts_us")
+        .selectExpr("user_id", "timestamp_micros(ts_us) as ts")
     }
+    replay(spark, "evict", Seq(slices)) { case Seq(src) =>
+      src.withWatermark("ts", "10 seconds")
+        .dropDuplicatesWithinWatermark("user_id")
+    }.rows
+      .groupBy("user_id")
+      .agg(count(lit(1)).cast("long").as("n_emitted"))
   }
 
   val streamDedupEvictSql: String =
@@ -568,45 +520,21 @@ object StreamingOps {
     * snapshot log provides.
     */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .selectExpr("cast(doc_id as long) as doc_id", "text")
-    val stage = java.nio.file.Files.createTempDirectory("stream_upsert_src")
-    val tableDir = stage.resolve("table").toString
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until 5).foreach { k =>
-        stageSlice(docs.filter(s"(doc_id + $k) % 3 = 0")
-          .selectExpr("doc_id", s"cast($k as long) as version",
-            s"concat('v', $k, ':', text) as text_v",
-            "cast(doc_id % 4 as string) as day"),
-          f"batch-$k%03d", base + k * 10000L)
-      }
-      val src = spark.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("version", LongType),
-          StructField("text_v", StringType), StructField("day", StringType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-      val q = src.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          graft.pipeline.ParquetFormat.merge(spark, tableDir, b, "doc_id", "day")
-        }
-        .start()
-      q.awaitTermination()
-      graft.pipeline.ParquetFormat.read(spark, tableDir)
-        .selectExpr("cast(doc_id as long) as doc_id",
-          "cast(version as long) as version", "text_v",
-          "cast(day as string) as day")
-        .localCheckpoint(true) // detach from the temp dirs before cleanup
-    } finally {
-      rmTree(stage) // staged files + checkpoint + merged table scratch
+    val batches = (0 until 5).map { k =>
+      docs.filter(s"(doc_id + $k) % 3 = 0")
+        .selectExpr("doc_id", s"cast($k as long) as version",
+          s"concat('v', $k, ':', text) as text_v",
+          "cast(doc_id % 4 as string) as day")
     }
+    val merge = ForeachBatch(
+      (b, tableDir) => graft.pipeline.ParquetFormat.merge(spark, tableDir, b, "doc_id", "day"),
+      tableDir => graft.pipeline.ParquetFormat.read(spark, tableDir))
+    replay(spark, "upsert", Seq(batches), merge) { case Seq(src) => src }.rows
+      .selectExpr("cast(doc_id as long) as doc_id",
+        "cast(version as long) as version", "text_v",
+        "cast(day as string) as day")
   }
 
   val streamUpsertSql: String =
@@ -639,64 +567,32 @@ object StreamingOps {
     * working set, never the stream's history.
     */
   def streamJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id", "event_type",
         "cast(ts as timestamp) as ts",
         "unix_micros(cast(ts as timestamp)) as ts_us")
-    val (minUs, maxUs) = {
-      val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
     // 2 real slices per side (was 4): the exactness argument above only
     // needs adjacent-slice coverage (>= 2 time-ordered slices); every
     // extra slice costs two more AvailableNow micro-batch floors, and
     // the two-sided joins are the bench loop's ceiling (r4 verdict ask).
-    val nSlices = 2
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_join_src")
-    val viewsDir = java.nio.file.Files.createDirectory(stage.resolve("views"))
-    val clicksDir = java.nio.file.Files.createDirectory(stage.resolve("clicks"))
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, into: java.nio.file.Path, name: String,
-        mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, into, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        val slice = ev.filter(col("ts_us") >= lo && col("ts_us") < hi)
-        stageSlice(slice.filter("event_type = 'view'").select("user_id", "ts"),
-          viewsDir, f"views-$i%03d", base + i * 10000L)
-        stageSlice(slice.filter("event_type = 'click'").select("user_id", "ts"),
-          clicksDir, f"clicks-$i%03d", base + i * 10000L)
-      }
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
-      def side(d: java.nio.file.Path, uid: String, tsc: String): DataFrame =
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(d.toString)
-          .withColumnRenamed("user_id", uid).withColumnRenamed("ts", tsc)
-          .withWatermark(tsc, "1 hour")
-      val joined = side(viewsDir, "user_id", "v_ts")
-        .join(side(clicksDir, "c_user", "c_ts"),
+    val (slices, _) = timeSlices(ev, 2)
+    def kind(k: String) = slices.map(_.filter(s"event_type = '$k'").select("user_id", "ts"))
+    replay(spark, "join", Seq(kind("view"), kind("click"))) { case Seq(views, clicks) =>
+      joinSide(views, "user_id", "v_ts")
+        .join(joinSide(clicks, "c_user", "c_ts"),
           expr("user_id = c_user AND c_ts >= v_ts AND " +
             "c_ts <= v_ts + interval 30 minutes"))
         .selectExpr("user_id", "unix_micros(v_ts) as view_us",
           "unix_micros(c_ts) as click_us")
-      val name = s"stream_join_${System.nanoTime()}"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).localCheckpoint(true)
-    } finally {
-      rmTree(stage) // views/ clicks/ staged files and scratch together
-    }
+    }.rows
   }
+
+  /** One side of the interval joins: `(user_id, ts)` renamed to
+    * `(uid, tsc)` under a 1-hour watermark.
+    */
+  private def joinSide(src: DataFrame, uid: String, tsc: String): DataFrame =
+    src.withColumnRenamed("user_id", uid).withColumnRenamed("ts", tsc)
+      .withWatermark(tsc, "1 hour")
 
   val streamJoinSql: String =
     """SELECT CAST(a.user_id AS BIGINT) AS user_id,
@@ -730,72 +626,34 @@ object StreamingOps {
     * state, only an eviction-time emission.
     */
   def streamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id", "event_type",
         "cast(ts as timestamp) as ts",
         "unix_micros(cast(ts as timestamp)) as ts_us")
-    val (minUs, maxUs) = {
-      val r = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
-      (r.getLong(0), r.getLong(1))
-    }
     // 2 real slices per side (was 4) — same adjacent-slice exactness
     // argument as streamJoin; the outer join additionally waits for the
     // sentinel-driven watermark pass before emitting unmatched rows,
     // which the sentinel slices (unchanged) still provide.
-    val nSlices = 2
-    val spanUs = math.max(1L, (maxUs - minUs) / nSlices + 1)
-    val stage = java.nio.file.Files.createTempDirectory("stream_ljoin_src")
-    val viewsDir = java.nio.file.Files.createDirectory(stage.resolve("views"))
-    val clicksDir = java.nio.file.Files.createDirectory(stage.resolve("clicks"))
-    def stageSlice(df: DataFrame, into: java.nio.file.Path, name: String,
-        mtimeMs: Long): Unit = { stageSliceFile(df, stage, into, name, mtimeMs); () }
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      (0 until nSlices).foreach { i =>
-        val lo = minUs + i * spanUs
-        val hi = if (i == nSlices - 1) Long.MaxValue else lo + spanUs
-        val slice = ev.filter(col("ts_us") >= lo && col("ts_us") < hi)
-        stageSlice(slice.filter("event_type = 'view'").select("user_id", "ts"),
-          viewsDir, f"views-$i%03d", base + i * 10000L)
-        stageSlice(slice.filter("event_type = 'click'").select("user_id", "ts"),
-          clicksDir, f"clicks-$i%03d", base + i * 10000L)
-      }
-      // sentinel slices: push the watermark far past every real window,
-      // one extra trigger at a time (eviction emission lags the data)
-      (0 until 3).foreach { s =>
-        val t = new java.sql.Timestamp((maxUs + (s + 4).toLong * 7200L * 1000000L) / 1000L)
-        stageSlice(Seq((-1L - s, t)).toDF("user_id", "ts"),
-          viewsDir, f"views-${nSlices + s}%03d", base + (nSlices + s) * 10000L)
-        stageSlice(Seq((-101L - s, t)).toDF("user_id", "ts"),
-          clicksDir, f"clicks-${nSlices + s}%03d", base + (nSlices + s) * 10000L)
-      }
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
-      def side(d: java.nio.file.Path, uid: String, tsc: String): DataFrame =
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(d.toString)
-          .withColumnRenamed("user_id", uid).withColumnRenamed("ts", tsc)
-          .withWatermark(tsc, "1 hour")
-      val joined = side(viewsDir, "user_id", "v_ts")
-        .join(side(clicksDir, "c_user", "c_ts"),
-          expr("user_id = c_user AND c_ts >= v_ts AND " +
-            "c_ts <= v_ts + interval 30 minutes"),
-          "leftOuter")
-        .selectExpr("user_id", "unix_micros(v_ts) as view_us",
-          "coalesce(unix_micros(c_ts), -1L) as click_us")
-      val name = s"stream_ljoin_${System.nanoTime()}"
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(name).where("user_id >= 0").localCheckpoint(true)
-    } finally {
-      rmTree(stage)
-    }
+    val (slices, maxUs) = timeSlices(ev, 2)
+    // sentinel slices: push the watermark far past every real window,
+    // one extra trigger at a time (eviction emission lags the data)
+    def side(k: String, sentinelId: Long) =
+      slices.map(_.filter(s"event_type = '$k'").select("user_id", "ts")) ++
+        (0 until 3).map { s =>
+          val t = new java.sql.Timestamp((maxUs + (s + 4).toLong * 7200L * 1000000L) / 1000L)
+          Seq((sentinelId - s, t)).toDF("user_id", "ts")
+        }
+    replay(spark, "ljoin", Seq(side("view", -1L), side("click", -101L))) {
+      case Seq(views, clicks) =>
+        joinSide(views, "user_id", "v_ts")
+          .join(joinSide(clicks, "c_user", "c_ts"),
+            expr("user_id = c_user AND c_ts >= v_ts AND " +
+              "c_ts <= v_ts + interval 30 minutes"),
+            "leftOuter")
+          .selectExpr("user_id", "unix_micros(v_ts) as view_us",
+            "coalesce(unix_micros(c_ts), -1L) as click_us")
+    }.rows.where("user_id >= 0")
   }
 
   val streamLeftJoinSql: String =
@@ -839,7 +697,6 @@ object StreamingOps {
     * exchange as on-time rows and die at the state operator's gate.
     */
   def streamLate(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .selectExpr("cast(user_id as long) as user_id",
@@ -856,55 +713,31 @@ object StreamingOps {
     val spanUs = (((maxUs - minUs) / 8 + 1) / 1000000L + 1L) * 1000000L
     val widxs = ev.selectExpr(s"ts_us div ${spanUs}L as widx")
       .distinct().orderBy("widx").as[Long].collect()
-    val stage = java.nio.file.Files.createTempDirectory("stream_late_src")
-    val staged = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def stageSlice(df: DataFrame, name: String, mtimeMs: Long): Unit =
-      staged += stageSliceFile(df, stage, stage, name, mtimeMs)
-    val base = System.currentTimeMillis() - 3600 * 1000L
-    try {
-      widxs.zipWithIndex.foreach { case (w, k) =>
-        val onTime = ev.filter(s"ts_us div ${spanUs}L = ${w}L").select("user_id", "ts")
-        val slice =
-          if (k >= 4)
-            onTime.unionByName(
-              ev.filter(s"ts_us div ${spanUs}L = ${widxs(k - 4)}L and user_id % 10 = 7")
-                .select("user_id", "ts"))
-          else onTime
-        stageSlice(slice, f"late-$k%03d", base + k * 10000L)
-      }
-      // sentinel: advances the final watermark past every real window
-      stageSlice(
-        Seq((-1L, new java.sql.Timestamp((maxUs + 10 * spanUs) / 1000L)))
-          .toDF("user_id", "ts"),
-        f"late-${widxs.length}%03d", base + widxs.length * 10000L)
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
-      val agg = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage.toString)
-        .withWatermark("ts", "0 seconds")
+    val slices = widxs.toSeq.zipWithIndex.map { case (w, k) =>
+      val onTime = ev.filter(s"ts_us div ${spanUs}L = ${w}L").select("user_id", "ts")
+      if (k >= 4)
+        onTime.unionByName(
+          ev.filter(s"ts_us div ${spanUs}L = ${widxs(k - 4)}L and user_id % 10 = 7")
+            .select("user_id", "ts"))
+      else onTime
+    }
+    // sentinel: advances the final watermark past every real window
+    val sentinel = Seq((-1L, new java.sql.Timestamp((maxUs + 10 * spanUs) / 1000L)))
+      .toDF("user_id", "ts")
+    val run = replay(spark, "late", Seq(slices :+ sentinel)) { case Seq(src) =>
+      src.withWatermark("ts", "0 seconds")
         .groupBy(window(col("ts"), s"${spanUs / 1000000L} seconds"))
         .agg(count(lit(1)).as("n"))
-      val name = s"stream_late_${System.nanoTime()}"
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // observability guard, not an oracle column: the engine must have
-      // REPORTED watermark drops (the metric counts dropped partial-agg
-      // rows, so its magnitude is partitioning-dependent — the exact
-      // planted-copy count is what the per-window hash compare pins)
-      val dropped = q.recentProgress.iterator.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-      require(widxs.length < 5 || dropped > 0,
-        "late plants present but numRowsDroppedByWatermark stayed 0 — watermark drop path never engaged")
-      spark.table(name)
-        .selectExpr(s"unix_micros(window.start) div ${spanUs}L as widx", "n")
-        .localCheckpoint(true)
-    } finally {
-      rmTree(stage)
     }
+    // observability guard, not an oracle column: the engine must have
+    // REPORTED watermark drops (the metric counts dropped partial-agg
+    // rows, so its magnitude is partitioning-dependent — the exact
+    // planted-copy count is what the per-window hash compare pins)
+    val dropped = run.progress.iterator.flatMap(_.stateOperators)
+      .map(_.numRowsDroppedByWatermark).sum
+    require(widxs.length < 5 || dropped > 0,
+      "late plants present but numRowsDroppedByWatermark stayed 0 — watermark drop path never engaged")
+    run.rows.selectExpr(s"unix_micros(window.start) div ${spanUs}L as widx", "n")
   }
 
   val streamLateSql: String =

@@ -127,6 +127,41 @@ class StreamingSpec extends SparkTestBase {
     assert(out.nonEmpty)
   }
 
+  /** Stage dirs a replay leaves in the JVM tmpdir, by name. */
+  private def stageDirs(): Set[String] =
+    new java.io.File(System.getProperty("java.io.tmpdir")).list()
+      .filter(_.matches("stream_.*_src.*")).toSet
+
+  private def streamViews(): Seq[String] =
+    spark.catalog.listTables().collect().toSeq
+      .filter(t => t.isTemporary && t.name.startsWith("stream_")).map(_.name)
+
+  test("every q_stream_* query drains, materializes and leaves nothing behind") {
+    StreamingOps.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val before = stageDirs()
+      val out = fn(spark, "/root/testdata/sf0.001")
+      assert(spark.streams.active.isEmpty, name)
+      assert(streamViews().isEmpty, name)
+      assert((stageDirs() -- before).isEmpty, name)
+      // the result is materialized: it still reads after its view is gone
+      assert(out.count() > 0, name)
+    }
+  }
+
+  test("a replay whose plan fails inside the micro-batch still cleans up") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val boom = udf { (x: Long) => if (x >= 0) throw new IllegalStateException("boom"); x }
+    val before = stageDirs()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingOps.replay(spark, "fail", Seq(Seq(spark.range(10).toDF()))) {
+        case Seq(src) => src.select(boom(col("id")).as("id"))
+      }
+    }
+    assert(spark.streams.active.isEmpty)
+    assert(streamViews().isEmpty)
+    assert((stageDirs() -- before).isEmpty)
+  }
+
   test("streaming ingestion commits batch partitions exactly-once across restart") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.lit

@@ -3,7 +3,12 @@
 against the oracle SQL in DuckDB over the same testdata tables, compare
 sorted-by-column-name values. Driver-side tooling only (not shipped code).
 
-Usage: check_oracle.py <sfDir> <verifyOutDir>
+Usage: check_oracle.py <sfDir> <verifyOutDir> [names]
+
+`names` (comma-separated exact query names, e.g. the GRAFT_VERIFY_ONLY
+list Verify ran with) narrows the check to those queries; a selected name
+without an oracle entry or without a dump still FAILs. Omitted or empty:
+check every oracle.
 """
 import json, sys, math
 import duckdb
@@ -27,7 +32,7 @@ def canon(rows, cols):
     return [cols[i] for i in idx], out
 
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -38,6 +43,11 @@ def main(sf_dir, out_dir):
     # driver joins on the dump filename). Locally iterate bare names only.
     oracles = {k: v for k, v in oracles.items()
                if not (k.endswith(".parquet") and k[:-8] in oracles)}
+    if only:
+        for name in sorted(only - oracles.keys()):
+            print(f"FAIL {name}: no oracle entry")
+            n_bad += 1
+        oracles = {k: v for k, v in oracles.items() if k in only}
     for name, sql in sorted(oracles.items()):
         try:
             spark_rel = con.sql(f"SELECT * FROM '{out_dir}/{name}.parquet/*.parquet'")
@@ -68,4 +78,5 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    only = set(filter(None, sys.argv[3].split(","))) if len(sys.argv) > 3 else None
+    sys.exit(main(sys.argv[1], sys.argv[2], only))
