@@ -29,19 +29,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Deterministic bench corpus parquet (generated once per JVM run;
     * generation is outside the timed window).
     */
@@ -88,7 +75,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = SparkEntry.cpus
     // sized so the extraction pass runs ~15 s at local[2] AND ~5 s at
     // local[8]: fixed overheads (scan setup, scheduling, shuffle spin-up
     // ~0.5-1 s) must be a small fraction of the measured window at BOTH
@@ -100,7 +87,7 @@ object Bench {
     // ---- per-query timings at the requested parallelism. A query that
     // throws records timing -1 and lands in `failed` — a regression must
     // be visible in the artifact, not masquerade as a fast query.
-    val spark = session(cpus)
+    val spark = SparkEntry.localSession("graft-bench", cpus)
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     // Session/codegen/parquet-footer warmup so the alphabetically-first
     // query does not absorb JVM startup (q1_agg recorded 10 s in r2's
@@ -111,10 +98,10 @@ object Bench {
     }
     val results =
       if (scalingOnly) Seq.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      else SparkEntry.registry.sortBy(_.name).map { case Q(name, run, _) =>
         def once(): Double = {
           val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
+          run(spark, sfDir).count()
           (System.nanoTime() - t0) / 1e9
         }
         // Streaming queries stage real files, spin up micro-batch
@@ -136,7 +123,7 @@ object Bench {
     timeExtract(spark, corpusDir, cpus) // one warmup pass (JIT + footers)
     // expression-only fast path at the same parallelism (no Dataset
     // encoder; sum(n_chars) forces every extraction). Timed INSIDE the
-    // interleaved scaling rounds below (min-of-5) — r3 postmortem: the
+    // interleaved scaling rounds below (min-of-7) — r3 postmortem: the
     // standalone median ran in its own load window and recorded 59.2k
     // docs/s while every in-session probe measured 104-116k; min-of-N
     // inside the rounds makes one steal window unable to halve the
@@ -163,7 +150,7 @@ object Bench {
     // local[8] in the same artifact). Interleaving all levels per round and
     // taking min-per-level makes a single steal window unable to corrupt
     // the recorded number.
-    // 5 rounds; efficiency = MEDIAN of per-round ratios. The two levels of
+    // Efficiency = MEDIAN of per-round ratios. The two levels of
     // one round run back-to-back under similar external load, so the
     // per-round ratio cancels host steal that min-per-level doesn't: mins
     // taken from different load windows skewed the ratio by ±0.15 in both
@@ -180,7 +167,7 @@ object Bench {
     // rounds narrow the min-of-rounds variance at ~90 s extra cost.
     (1 to 7).foreach { round =>
       levels.foreach { lvl =>
-        val s = session(lvl)
+        val s = SparkEntry.localSession("graft-bench", lvl)
         if (round == 1) timeExtract(s, corpusDir, lvl) // warmup first use
         val (t, n) = timeExtract(s, corpusDir, lvl)
         times(lvl) = t :: times(lvl)
@@ -191,7 +178,7 @@ object Bench {
     }
     val t2 = times(2).min
     val t8 = times(8).min
-    // best-of-5 interleaved at the requested parallelism
+    // best-of-7 interleaved at the requested parallelism
     val tMain = times(mainLvl).min
     val tExpr = exprTimes.min
     val pairs = times(2).reverse.zip(times(8).reverse)

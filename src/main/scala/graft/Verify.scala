@@ -1,35 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("graft-verify", SparkEntry.cpus)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (NOT used by the driver): comma-separated
     // exact query names; unset = run everything.
     val only = sys.env.get("GRAFT_VERIFY_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
+    SparkEntry.registry.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}.parquet")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
+    def str(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
       case '\n' => "\\n"
@@ -45,11 +36,12 @@ object Verify {
     // err:"no_oracle". Emit every oracle under BOTH keys so either join works.
     val json = SparkEntry.oracleSql
       .flatMap { case (k, v) => Seq(k -> v, s"$k.parquet" -> v) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${str(k)}: ${str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Loud drift check: every dump dir written above must have an oracle
-    // entry under its filename key. A missing key is a contract bug that
-    // would silently zero the round's correctness record — fail the run.
+    // Stale-dump check: every query carries its oracle by construction,
+    // but a reused out dir can still hold dump dirs of queries that were
+    // since renamed or removed. The oracle compare would score each of
+    // them as no_oracle — fail the run instead.
     val dumped = new java.io.File(outDir).listFiles()
       .filter(f => f.isDirectory && f.getName.endsWith(".parquet")).map(_.getName)
     val orphans = dumped.filterNot(d =>

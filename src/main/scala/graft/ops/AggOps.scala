@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -112,13 +113,8 @@ object AggOps {
 
   // -------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_histogram_udaf" -> (histogram(_, _)),
-    "q_upsert" -> (upsert(_, _)),
-    "q_salted_agg" -> (saltedAgg(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_histogram_udaf" -> histogramSql,
-    "q_upsert" -> upsertSql,
-    "q_salted_agg" -> saltedAggSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_histogram_udaf", histogram, histogramSql),
+    Q("q_upsert", upsert, upsertSql),
+    Q("q_salted_agg", saltedAgg, saltedAggSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Article-metadata tier over deterministic article pages
@@ -504,37 +505,20 @@ object ArticleOps {
       |  ON a.host = b.host AND a.path_key = b.path_key
       | AND a.lang_dir < b.lang_dir""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_rel_canonical" -> (relCanonical(_, _)),
-    "q_bitext_candidates" -> (bitextCandidates(_, _)),
-    "q_dom_skeleton" -> (domSkeleton(_, _)),
-    "q_template_diversity" -> (templateDiversity(_, _)),
-    "q_meta_refresh" -> (metaRefresh(_, _)),
-    "q_image_alt_pairs" -> (imageAltPairs(_, _)),
-    "q_declared_lang" -> (declaredLang(_, _)),
-    "q_hreflang_alternates" -> (hreflangAlternates(_, _)),
-    "q_pdf_info" -> (pdfInfo(_, _)),
-    "q_html_markdown" -> (htmlMarkdown(_, _)),
-    "q_license_meta" -> (licenseMeta(_, _)),
-    "q_jsonld_article" -> (jsonldArticle(_, _)),
-    "q_pub_date" -> (pubDate(_, _)),
-    "q_pagination" -> (pagination(_, _)),
-    "q_soft404" -> (soft404(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_rel_canonical" -> relCanonicalSql,
-    "q_bitext_candidates" -> bitextCandidatesSql,
-    "q_dom_skeleton" -> domSkeletonSql,
-    "q_template_diversity" -> templateDiversitySql,
-    "q_meta_refresh" -> metaRefreshSql,
-    "q_image_alt_pairs" -> imageAltPairsSql,
-    "q_declared_lang" -> declaredLangSql,
-    "q_hreflang_alternates" -> hreflangAlternatesSql,
-    "q_pdf_info" -> pdfInfoSql,
-    "q_html_markdown" -> htmlMarkdownSql,
-    "q_license_meta" -> licenseMetaSql,
-    "q_jsonld_article" -> jsonldArticleSql,
-    "q_pub_date" -> pubDateSql,
-    "q_pagination" -> paginationSql,
-    "q_soft404" -> soft404Sql)
+  val registry: Seq[Q] = Seq(
+    Q("q_rel_canonical", relCanonical, relCanonicalSql),
+    Q("q_bitext_candidates", bitextCandidates, bitextCandidatesSql),
+    Q("q_dom_skeleton", domSkeleton, domSkeletonSql),
+    Q("q_template_diversity", templateDiversity, templateDiversitySql),
+    Q("q_meta_refresh", metaRefresh, metaRefreshSql),
+    Q("q_image_alt_pairs", imageAltPairs, imageAltPairsSql),
+    Q("q_declared_lang", declaredLang, declaredLangSql),
+    Q("q_hreflang_alternates", hreflangAlternates, hreflangAlternatesSql),
+    Q("q_pdf_info", pdfInfo, pdfInfoSql),
+    Q("q_html_markdown", htmlMarkdown, htmlMarkdownSql),
+    Q("q_license_meta", licenseMeta, licenseMetaSql),
+    Q("q_jsonld_article", jsonldArticle, jsonldArticleSql),
+    Q("q_pub_date", pubDate, pubDateSql),
+    Q("q_pagination", pagination, paginationSql),
+    Q("q_soft404", soft404, soft404Sql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -807,37 +808,20 @@ object CorpusOps {
       |  CAST(sum(d_new) OVER (ORDER BY day) AS BIGINT) AS cum_vocab
       |FROM j""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_novelty_curve" -> (noveltyCurve(_, _)),
-    "q_heaps_law" -> (heapsLaw(_, _)),
-    "q_effective_tokens" -> (effectiveTokens(_, _)),
-    "q_template_spam" -> (templateSpam(_, _)),
-    "q_para_dedup" -> (paraDedup(_, _)),
-    "q_ngram_dup_rate" -> (ngramDupRate(_, _)),
-    "q_chunk_windows" -> (chunkWindows(_, _)),
-    "q_vocab_topk" -> (vocabTopk(_, _)),
-    "q_nfc_normalize" -> (nfcNormalize(_, _)),
-    "q_cdc_chunks" -> (cdcChunks(_, _)),
-    "q_exact_substr_cut" -> (exactSubstrCut(_, _)),
-    "q_substr_dedup_50" -> (substrDedup50(_, _)),
-    "q_dataset_card" -> (datasetCard(_, _)),
-    "q_compact_plan" -> (compactPlan(_, _)),
-    "q_host_line_dedup" -> (hostLineDedup(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_novelty_curve" -> noveltyCurveSql,
-    "q_heaps_law" -> heapsLawSql,
-    "q_effective_tokens" -> effectiveTokensSql,
-    "q_template_spam" -> templateSpamSql,
-    "q_para_dedup" -> paraDedupSql,
-    "q_ngram_dup_rate" -> ngramDupRateSql,
-    "q_chunk_windows" -> chunkWindowsSql,
-    "q_vocab_topk" -> vocabTopkSql,
-    "q_nfc_normalize" -> nfcNormalizeSql,
-    "q_cdc_chunks" -> cdcChunksSql,
-    "q_exact_substr_cut" -> exactSubstrCutSql,
-    "q_substr_dedup_50" -> substrDedup50Sql,
-    "q_dataset_card" -> datasetCardSql,
-    "q_compact_plan" -> compactPlanSql,
-    "q_host_line_dedup" -> hostLineDedupSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_novelty_curve", noveltyCurve, noveltyCurveSql),
+    Q("q_heaps_law", heapsLaw, heapsLawSql),
+    Q("q_effective_tokens", effectiveTokens, effectiveTokensSql),
+    Q("q_template_spam", templateSpam, templateSpamSql),
+    Q("q_para_dedup", paraDedup, paraDedupSql),
+    Q("q_ngram_dup_rate", ngramDupRate, ngramDupRateSql),
+    Q("q_chunk_windows", chunkWindows, chunkWindowsSql),
+    Q("q_vocab_topk", vocabTopk, vocabTopkSql),
+    Q("q_nfc_normalize", nfcNormalize, nfcNormalizeSql),
+    Q("q_cdc_chunks", cdcChunks, cdcChunksSql),
+    Q("q_exact_substr_cut", exactSubstrCut, exactSubstrCutSql),
+    Q("q_substr_dedup_50", substrDedup50, substrDedup50Sql),
+    Q("q_dataset_card", datasetCard, datasetCardSql),
+    Q("q_compact_plan", compactPlan, compactPlanSql),
+    Q("q_host_line_dedup", hostLineDedup, hostLineDedupSql))
 }

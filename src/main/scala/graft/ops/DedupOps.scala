@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1044,45 +1045,24 @@ object DedupOps {
        |FROM c_lf l JOIN eb USING (band_no, bkey)
        |GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_split_leakage" -> (splitLeakage(_, _)),
-    "q_split_by_group" -> (splitByGroup(_, _)),
-    "q_decontam_fuzzy" -> (decontamFuzzy(_, _)),
-    "q_dedup_exact" -> (exact(_, _)),
-    "q_dedup_keep_newest" -> (keepNewest(_, _)),
-    "q_dedup_jaccard" -> (jaccard(_, _)),
-    "q_shingle_containment" -> (shingleContainment(_, _)),
-    "q_dedup_funnel" -> (dedupFunnel(_, _)),
-    "q_dedup_minhash_lsh" -> (minhashLsh(_, _)),
-    "q_lsh_bucket_stats" -> (lshBucketStats(_, _)),
-    "q_dedup_simhash" -> (simhash(_, _)),
-    "q_simhash_pairs" -> (simhashPairs(_, _)),
-    "q_simhash_bucket_stats" -> (simhashBucketStats(_, _)),
-    "q_dedup_embed_cosine" -> (embedCosine(_, _)),
-    "q_dedup_lsh_verify" -> (lshVerify(_, _)),
-    "q_minhash_est" -> (minhashEst(_, _)),
-    "q_dedup_clusters" -> (dedupClusters(_, _)),
-    "q_dedup_canonical" -> (dedupCanonical(_, _)),
-    "q_dedup_incremental" -> (dedupIncremental(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_split_leakage" -> splitLeakageSql,
-    "q_split_by_group" -> splitByGroupSql,
-    "q_decontam_fuzzy" -> decontamFuzzySql,
-    "q_dedup_exact" -> exactSql,
-    "q_dedup_keep_newest" -> keepNewestSql,
-    "q_dedup_jaccard" -> jaccardSql,
-    "q_shingle_containment" -> shingleContainmentSql,
-    "q_dedup_funnel" -> dedupFunnelSql,
-    "q_dedup_minhash_lsh" -> minhashLshSql,
-    "q_lsh_bucket_stats" -> lshBucketStatsSql,
-    "q_dedup_simhash" -> simhashSql,
-    "q_simhash_pairs" -> simhashPairsSql,
-    "q_simhash_bucket_stats" -> simhashBucketStatsSql,
-    "q_dedup_embed_cosine" -> embedCosineSql,
-    "q_dedup_lsh_verify" -> lshVerifySql,
-    "q_minhash_est" -> minhashEstSql,
-    "q_dedup_clusters" -> dedupClustersSql,
-    "q_dedup_canonical" -> dedupCanonicalSql,
-    "q_dedup_incremental" -> dedupIncrementalSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_split_leakage", splitLeakage, splitLeakageSql),
+    Q("q_split_by_group", splitByGroup, splitByGroupSql),
+    Q("q_decontam_fuzzy", decontamFuzzy, decontamFuzzySql),
+    Q("q_dedup_exact", exact, exactSql),
+    Q("q_dedup_keep_newest", keepNewest, keepNewestSql),
+    Q("q_dedup_jaccard", jaccard, jaccardSql),
+    Q("q_shingle_containment", shingleContainment, shingleContainmentSql),
+    Q("q_dedup_funnel", dedupFunnel, dedupFunnelSql),
+    Q("q_dedup_minhash_lsh", minhashLsh(_, _), minhashLshSql),
+    Q("q_lsh_bucket_stats", lshBucketStats, lshBucketStatsSql),
+    Q("q_dedup_simhash", simhash, simhashSql),
+    Q("q_simhash_pairs", simhashPairs, simhashPairsSql),
+    Q("q_simhash_bucket_stats", simhashBucketStats, simhashBucketStatsSql),
+    Q("q_dedup_embed_cosine", embedCosine, embedCosineSql),
+    Q("q_dedup_lsh_verify", lshVerify, lshVerifySql),
+    Q("q_minhash_est", minhashEst, minhashEstSql),
+    Q("q_dedup_clusters", dedupClusters, dedupClustersSql),
+    Q("q_dedup_canonical", dedupCanonical, dedupCanonicalSql),
+    Q("q_dedup_incremental", dedupIncremental, dedupIncrementalSql))
 }

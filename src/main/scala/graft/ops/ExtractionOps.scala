@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import graft.pipeline.ExtractPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -857,71 +858,37 @@ object ExtractionOps {
       |    0) // 512 AS BIGINT) AS shard_id
       |FROM surv s JOIN quot USING (component)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_corpus_pipeline" -> (corpusPipeline(_, _)),
-    "q_crawl_to_corpus" -> (crawlToCorpus(_, _)),
-    "q_extract_error_census" -> (extractErrorCensus(_, _)),
-    "q_extract_doc_struct" -> (extractDocStruct(_, _)),
-    "q_extract_arabic" -> (extractArabic(_, _)),
-    "q_extract_fastpath" -> (extractFastpath(_, _)),
-    "q_extract_sql_expr" -> (extractSqlExpr(_, _)),
-    "q_extract_html" -> (extractHtml(_, _)),
-    "q_incremental_extract" -> (incrementalExtract(_, _)),
-    "q_extract_job_ledger" -> (extractJobLedger(_, _)),
-    "q_extract_html_chunked" -> (extractHtmlChunked(_, _)),
-    "q_extract_pdf" -> (extractPdf(_, _)),
-    "q_extract_pdf_flate" -> (extractPdfFlate(_, _)),
-    "q_extract_pdf_filters" -> (extractPdfFilters(_, _)),
-    "q_extract_pdf_encrypted" -> (extractPdfEncrypted(_, _)),
-    "q_extract_warc" -> (extractWarc(_, _)),
-    "q_warc_revisit" -> (warcRevisit(_, _)),
-    "q_warc_cdx_offsets" -> (warcCdxOffsets(_, _)),
-    "q_warc_gz_members" -> (warcGzMembers(_, _)),
-    "q_extract_pdf_multipage" -> (extractPdfMultipage(_, _)),
-    "q_extract_pdf_scrambled" -> (extractPdfScrambled(_, _)),
-    "q_extract_pdf_winansi" -> (extractPdfWinAnsi(_, _)),
-    "q_extract_pdf_cid" -> (extractPdfCid(_, _)),
-    "q_extract_passthrough" -> (extractPassthrough(_, _)),
-    "q_extract_mixed" -> (extractMixed(_, _)),
-    "q_extract_spans" -> (extractSpans(_, _)),
-    "q_extract_win1252" -> (extractWin1252(_, _)),
-    "q_extract_utf16" -> (extractUtf16(_, _)),
-    "q_extract_gzip" -> (extractGzip(_, _)),
-    "q_extract_zstd" -> (extractZstd(_, _)),
-    "q_html_table" -> (htmlTable(_, _)),
-    "q_wet_roundtrip" -> (wetRoundtrip(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_corpus_pipeline" -> corpusPipelineSql,
-    "q_crawl_to_corpus" -> crawlToCorpusSql,
-    "q_extract_error_census" -> extractErrorCensusSql,
-    "q_extract_doc_struct" -> extractDocStructSql,
-    "q_extract_arabic" -> extractArabicSql,
-    "q_extract_fastpath" -> extractHtmlSql,
-    "q_extract_sql_expr" -> extractHtmlSql,
-    "q_extract_html" -> extractHtmlSql,
-    "q_incremental_extract" -> incrementalExtractSql,
-    "q_extract_job_ledger" -> extractJobLedgerSql,
-    "q_extract_html_chunked" -> extractHtmlChunkedSql,
-    "q_extract_pdf" -> extractPdfSql,
-    "q_extract_pdf_flate" -> extractPdfSql,
-    "q_extract_pdf_filters" -> extractPdfSql,
-    "q_extract_pdf_encrypted" -> extractPdfSql,
-    "q_extract_warc" -> extractHtmlSql,
-    "q_warc_revisit" -> warcRevisitSql,
-    "q_warc_cdx_offsets" -> warcCdxOffsetsSql,
-    "q_warc_gz_members" -> warcGzMembersSql,
-    "q_extract_pdf_multipage" -> extractPdfMultipageSql,
-    "q_extract_pdf_scrambled" -> extractPdfMultipageSql,
-    "q_extract_pdf_winansi" -> extractPdfWinAnsiSql,
-    "q_extract_pdf_cid" -> extractPdfCidSql,
-    "q_extract_passthrough" -> extractPassthroughSql,
-    "q_extract_mixed" -> extractMixedSql,
-    "q_extract_spans" -> extractSpansSql,
-    "q_extract_win1252" -> extractWin1252Sql,
-    "q_extract_utf16" -> extractUtf16Sql,
-    "q_extract_gzip" -> extractGzipSql,
-    "q_extract_zstd" -> extractGzipSql,
-    "q_html_table" -> htmlTableSql,
-    "q_wet_roundtrip" -> wetRoundtripSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_corpus_pipeline", corpusPipeline, corpusPipelineSql),
+    Q("q_crawl_to_corpus", crawlToCorpus, crawlToCorpusSql),
+    Q("q_extract_error_census", extractErrorCensus, extractErrorCensusSql),
+    Q("q_extract_doc_struct", extractDocStruct, extractDocStructSql),
+    Q("q_extract_arabic", extractArabic, extractArabicSql),
+    Q("q_extract_fastpath", extractFastpath, extractHtmlSql),
+    Q("q_extract_sql_expr", extractSqlExpr, extractHtmlSql),
+    Q("q_extract_html", extractHtml, extractHtmlSql),
+    Q("q_incremental_extract", incrementalExtract, incrementalExtractSql),
+    Q("q_extract_job_ledger", extractJobLedger, extractJobLedgerSql),
+    Q("q_extract_html_chunked", extractHtmlChunked, extractHtmlChunkedSql),
+    Q("q_extract_pdf", extractPdf, extractPdfSql),
+    Q("q_extract_pdf_flate", extractPdfFlate, extractPdfSql),
+    Q("q_extract_pdf_filters", extractPdfFilters, extractPdfSql),
+    Q("q_extract_pdf_encrypted", extractPdfEncrypted, extractPdfSql),
+    Q("q_extract_warc", extractWarc, extractHtmlSql),
+    Q("q_warc_revisit", warcRevisit, warcRevisitSql),
+    Q("q_warc_cdx_offsets", warcCdxOffsets, warcCdxOffsetsSql),
+    Q("q_warc_gz_members", warcGzMembers, warcGzMembersSql),
+    Q("q_extract_pdf_multipage", extractPdfMultipage, extractPdfMultipageSql),
+    Q("q_extract_pdf_scrambled", extractPdfScrambled, extractPdfMultipageSql),
+    Q("q_extract_pdf_winansi", extractPdfWinAnsi, extractPdfWinAnsiSql),
+    Q("q_extract_pdf_cid", extractPdfCid, extractPdfCidSql),
+    Q("q_extract_passthrough", extractPassthrough, extractPassthroughSql),
+    Q("q_extract_mixed", extractMixed, extractMixedSql),
+    Q("q_extract_spans", extractSpans, extractSpansSql),
+    Q("q_extract_win1252", extractWin1252, extractWin1252Sql),
+    Q("q_extract_utf16", extractUtf16, extractUtf16Sql),
+    Q("q_extract_gzip", extractGzip, extractGzipSql),
+    Q("q_extract_zstd", extractZstd, extractGzipSql),
+    Q("q_html_table", htmlTable, htmlTableSql),
+    Q("q_wet_roundtrip", wetRoundtrip, wetRoundtripSql))
 }

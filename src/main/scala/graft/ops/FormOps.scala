@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import graft.kernels.ScalarKernels
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -680,47 +681,25 @@ object FormOps {
 
   // -------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_structured_record" -> (structuredRecord(_, _)),
-    "q_clean_token" -> (cleanTokenQ(_, _)),
-    "q_find_key_recursive" -> (findKeyRecursiveQ(_, _)),
-    "q_marital_enum" -> (maritalEnum(_, _)),
-    "q_flatten_find" -> (flattenFind(_, _)),
-    "q_clean_ocr" -> (cleanOcr(_, _)),
-    "q_checkbox_kernel" -> (checkboxKernel(_, _)),
-    "q_fragment_rejoin" -> (fragmentRejoin(_, _)),
-    "q_service_desc" -> (serviceDesc(_, _)),
-    "q_service_codes" -> (serviceCodes(_, _)),
-    "q_date_multi" -> (dateMulti(_, _)),
-    "q_icd10" -> (icd10(_, _)),
-    "q_chief_complaint" -> (chiefComplaint(_, _)),
-    "q_name_split" -> (nameSplit(_, _)),
-    "q_base64" -> (base64Roundtrip(_, _)),
-    "q_json_carve" -> (jsonCarve(_, _)),
-    "q_ngram_chunks" -> (ngramChunks(_, _)),
-    "q_payer_lines" -> (payerLines(_, _)),
-    "q_bracket_parse" -> (bracketParse(_, _)),
-    "q_service_table" -> (serviceTable(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_structured_record" -> structuredRecordSql,
-    "q_clean_token" -> cleanTokenSql,
-    "q_find_key_recursive" -> findKeyRecursiveSql,
-    "q_marital_enum" -> maritalEnumSql,
-    "q_flatten_find" -> flattenFindSql,
-    "q_clean_ocr" -> cleanOcrSql,
-    "q_checkbox_kernel" -> checkboxKernelSql,
-    "q_fragment_rejoin" -> fragmentRejoinSql,
-    "q_service_desc" -> serviceDescSql,
-    "q_service_codes" -> serviceCodesSql,
-    "q_date_multi" -> dateMultiSql,
-    "q_icd10" -> icd10Sql,
-    "q_chief_complaint" -> chiefComplaintSql,
-    "q_name_split" -> nameSplitSql,
-    "q_base64" -> base64RoundtripSql,
-    "q_json_carve" -> jsonCarveSql,
-    "q_ngram_chunks" -> ngramChunksSql,
-    "q_payer_lines" -> payerLinesSql,
-    "q_bracket_parse" -> bracketParseSql,
-    "q_service_table" -> serviceTableSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_structured_record", structuredRecord, structuredRecordSql),
+    Q("q_clean_token", cleanTokenQ, cleanTokenSql),
+    Q("q_find_key_recursive", findKeyRecursiveQ, findKeyRecursiveSql),
+    Q("q_marital_enum", maritalEnum, maritalEnumSql),
+    Q("q_flatten_find", flattenFind, flattenFindSql),
+    Q("q_clean_ocr", cleanOcr, cleanOcrSql),
+    Q("q_checkbox_kernel", checkboxKernel, checkboxKernelSql),
+    Q("q_fragment_rejoin", fragmentRejoin, fragmentRejoinSql),
+    Q("q_service_desc", serviceDesc, serviceDescSql),
+    Q("q_service_codes", serviceCodes, serviceCodesSql),
+    Q("q_date_multi", dateMulti, dateMultiSql),
+    Q("q_icd10", icd10, icd10Sql),
+    Q("q_chief_complaint", chiefComplaint, chiefComplaintSql),
+    Q("q_name_split", nameSplit, nameSplitSql),
+    Q("q_base64", base64Roundtrip, base64RoundtripSql),
+    Q("q_json_carve", jsonCarve, jsonCarveSql),
+    Q("q_ngram_chunks", ngramChunks, ngramChunksSql),
+    Q("q_payer_lines", payerLines, payerLinesSql),
+    Q("q_bracket_parse", bracketParse, bracketParseSql),
+    Q("q_service_table", serviceTable, serviceTableSql))
 }

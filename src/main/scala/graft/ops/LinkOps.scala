@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, expr, max}
 
@@ -670,7 +671,7 @@ object LinkOps {
     * would bound a hub destination at web scale; here in-degrees are
     * generator-bounded and the join is exact.
     */
-  def cocitation(spark: SparkSession, dir: String): DataFrame = {
+  def bibCoupling(spark: SparkSession, dir: String): DataFrame = {
     val e = domainEdges(spark, dir)
       .select("src_host", "dst_host").distinct().localCheckpoint(true)
     e.toDF("a_host", "dst_host")
@@ -681,7 +682,7 @@ object LinkOps {
       .where("n_shared >= 2")
   }
 
-  val cocitationSql: String =
+  val bibCouplingSql: String =
     s"""WITH e0 AS ($domainEdgesSql),
       |e AS (SELECT DISTINCT src_host, dst_host FROM e0)
       |SELECT a.src_host AS a_host, b.src_host AS b_host,
@@ -1475,69 +1476,36 @@ object LinkOps {
       |       WHEN 3 THEN 1 ELSE 2 END AS BIGINT) AS n_stripped
       |FROM b""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fetch_shards" -> (fetchShards(_, _)),
-    "q_idn_homograph" -> (idnHomograph(_, _)),
-    "q_url_strip_tracking" -> (urlStripTracking(_, _)),
-    "q_recrawl_etag" -> (recrawlEtag(_, _)),
-    "q_revision_ratio" -> (revisionRatio(_, _)),
-    "q_host_communities" -> (hostCommunities(_, _)),
-    "q_robots_cache_ttl" -> (robotsCacheTtl(_, _)),
-    "q_outlinks" -> (outlinks(_, _)),
-    "q_domain_edges" -> (domainEdges(_, _)),
-    "q_robots_gate" -> (robotsGate(_, _)),
-    "q_anchor_terms" -> (anchorTerms(_, _)),
-    "q_pagerank" -> (pagerank(_, _)),
-    "q_robots_txt_gate" -> (robotsTxtGate(_, _)),
-    "q_hits_scores" -> (hitsScores(_, _)),
-    "q_crawl_budget" -> (crawlBudget(_, _)),
-    "q_url_trap" -> (urlTrapGate(_, _)),
-    "q_surt_key" -> (surtKeys(_, _)),
-    "q_cdx_index" -> (cdxIndex(_, _)),
-    "q_html_meta" -> (htmlMeta(_, _)),
-    "q_sitemap_urls" -> (sitemapUrls(_, _)),
-    "q_sitemap_coverage" -> (sitemapCoverage(_, _)),
-    "q_politeness_audit" -> (politenessAudit(_, _)),
-    "q_robots_delta" -> (robotsDelta(_, _)),
-    "q_cocitation" -> (cocitation(_, _)),
-    "q_feed_items" -> (feedItems(_, _)),
-    "q_frontier_schedule" -> (frontierSchedule(_, _)),
-    "q_robots_sitemaps" -> (robotsSitemaps(_, _)),
-    "q_crawl_delay" -> (crawlDelay(_, _)),
-    "q_redirect_resolve" -> (redirectResolve(_, _)),
-    "q_fetch_plan" -> (fetchPlan(_, _)),
-    "q_recrawl_schedule" -> (recrawlSchedule(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_fetch_shards" -> fetchShardsSql,
-    "q_idn_homograph" -> idnHomographSql,
-    "q_url_strip_tracking" -> urlStripTrackingSql,
-    "q_recrawl_etag" -> recrawlEtagSql,
-    "q_revision_ratio" -> revisionRatioSql,
-    "q_host_communities" -> hostCommunitiesSql,
-    "q_robots_cache_ttl" -> robotsCacheTtlSql,
-    "q_outlinks" -> outlinksSql,
-    "q_domain_edges" -> domainEdgesSql,
-    "q_robots_gate" -> robotsGateSql,
-    "q_anchor_terms" -> anchorTermsSql,
-    "q_pagerank" -> pagerankSql,
-    "q_robots_txt_gate" -> robotsTxtGateSql,
-    "q_hits_scores" -> hitsScoresSql,
-    "q_crawl_budget" -> crawlBudgetSql,
-    "q_url_trap" -> urlTrapGateSql,
-    "q_surt_key" -> surtKeysSql,
-    "q_cdx_index" -> cdxIndexSql,
-    "q_html_meta" -> htmlMetaSql,
-    "q_sitemap_urls" -> sitemapUrlsSql,
-    "q_sitemap_coverage" -> sitemapCoverageSql,
-    "q_politeness_audit" -> politenessAuditSql,
-    "q_robots_delta" -> robotsDeltaSql,
-    "q_cocitation" -> cocitationSql,
-    "q_feed_items" -> feedItemsSql,
-    "q_frontier_schedule" -> frontierScheduleSql,
-    "q_robots_sitemaps" -> robotsSitemapsSql,
-    "q_crawl_delay" -> crawlDelaySql,
-    "q_redirect_resolve" -> redirectResolveSql,
-    "q_fetch_plan" -> fetchPlanSql,
-    "q_recrawl_schedule" -> recrawlScheduleSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_fetch_shards", fetchShards, fetchShardsSql),
+    Q("q_idn_homograph", idnHomograph, idnHomographSql),
+    Q("q_url_strip_tracking", urlStripTracking, urlStripTrackingSql),
+    Q("q_recrawl_etag", recrawlEtag, recrawlEtagSql),
+    Q("q_revision_ratio", revisionRatio, revisionRatioSql),
+    Q("q_host_communities", hostCommunities, hostCommunitiesSql),
+    Q("q_robots_cache_ttl", robotsCacheTtl, robotsCacheTtlSql),
+    Q("q_outlinks", outlinks, outlinksSql),
+    Q("q_domain_edges", domainEdges, domainEdgesSql),
+    Q("q_robots_gate", robotsGate, robotsGateSql),
+    Q("q_anchor_terms", anchorTerms, anchorTermsSql),
+    Q("q_pagerank", pagerank, pagerankSql),
+    Q("q_robots_txt_gate", robotsTxtGate, robotsTxtGateSql),
+    Q("q_hits_scores", hitsScores, hitsScoresSql),
+    Q("q_crawl_budget", crawlBudget, crawlBudgetSql),
+    Q("q_url_trap", urlTrapGate, urlTrapGateSql),
+    Q("q_surt_key", surtKeys, surtKeysSql),
+    Q("q_cdx_index", cdxIndex, cdxIndexSql),
+    Q("q_html_meta", htmlMeta, htmlMetaSql),
+    Q("q_sitemap_urls", sitemapUrls, sitemapUrlsSql),
+    Q("q_sitemap_coverage", sitemapCoverage, sitemapCoverageSql),
+    Q("q_politeness_audit", politenessAudit, politenessAuditSql),
+    Q("q_robots_delta", robotsDelta, robotsDeltaSql),
+    Q("q_bib_coupling", bibCoupling, bibCouplingSql),
+    Q("q_feed_items", feedItems, feedItemsSql),
+    Q("q_frontier_schedule", frontierSchedule, frontierScheduleSql),
+    Q("q_robots_sitemaps", robotsSitemaps, robotsSitemapsSql),
+    Q("q_crawl_delay", crawlDelay, crawlDelaySql),
+    Q("q_redirect_resolve", redirectResolve, redirectResolveSql),
+    Q("q_fetch_plan", fetchPlan, fetchPlanSql),
+    Q("q_recrawl_schedule", recrawlSchedule, recrawlScheduleSql))
 }

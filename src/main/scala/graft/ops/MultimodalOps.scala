@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -383,25 +384,14 @@ object MultimodalOps {
       |  CAST(sum((ci * 97 + 3 * d) % 256) AS BIGINT) AS sum_b
       |FROM i GROUP BY d""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_media_meta" -> (mediaMeta(_, _)),
-    "q_media_frames" -> (mediaFrames(_, _)),
-    "q_media_features" -> (mediaFeatures(_, _)),
-    "q_media_resize" -> (mediaResize(_, _)),
-    "q_media_decode_bmp" -> (mediaDecodeBmp(_, _)),
-    "q_media_decode_png" -> (mediaDecodePng(_, _)),
-    "q_media_decode_jpeg" -> (mediaDecodeJpeg(_, _)),
-    "q_media_decode_gif" -> (mediaDecodeGif(_, _)),
-    "q_media_decode_wav" -> (mediaDecodeWav(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_media_meta" -> mediaMetaSql,
-    "q_media_frames" -> mediaFramesSql,
-    "q_media_features" -> mediaFeaturesSql,
-    "q_media_resize" -> mediaResizeSql,
-    "q_media_decode_bmp" -> mediaDecodeBmpSql,
-    "q_media_decode_png" -> mediaDecodePngSql,
-    "q_media_decode_jpeg" -> mediaDecodeJpegSql,
-    "q_media_decode_gif" -> mediaDecodeGifSql,
-    "q_media_decode_wav" -> mediaDecodeWavSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_media_meta", mediaMeta, mediaMetaSql),
+    Q("q_media_frames", mediaFrames, mediaFramesSql),
+    Q("q_media_features", mediaFeatures, mediaFeaturesSql),
+    Q("q_media_resize", mediaResize, mediaResizeSql),
+    Q("q_media_decode_bmp", mediaDecodeBmp, mediaDecodeBmpSql),
+    Q("q_media_decode_png", mediaDecodePng, mediaDecodePngSql),
+    Q("q_media_decode_jpeg", mediaDecodeJpeg, mediaDecodeJpegSql),
+    Q("q_media_decode_gif", mediaDecodeGif, mediaDecodeGifSql),
+    Q("q_media_decode_wav", mediaDecodeWav, mediaDecodeWavSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -474,21 +475,12 @@ object QualityOps {
       |    - (CAST(n_hosts AS DOUBLE) + 1.0) / n_hosts, 6) AS gini
       |FROM a""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_powerlaw_tail" -> (powerlawTail(_, _)),
-    "q_host_gini" -> (hostGini(_, _)),
-    "q_decontaminate" -> (decontaminate(_, _)),
-    "q_blocklist_gate" -> (blocklistGate(_, _)),
-    "q_robust_outliers" -> (robustOutliers(_, _)),
-    "q_dist_shift" -> (distShift(_, _)),
-    "q_lm_perplexity" -> (lmPerplexity(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_powerlaw_tail" -> powerlawTailSql,
-    "q_host_gini" -> hostGiniSql,
-    "q_decontaminate" -> decontaminateSql,
-    "q_blocklist_gate" -> blocklistGateSql,
-    "q_robust_outliers" -> robustOutliersSql,
-    "q_dist_shift" -> distShiftSql,
-    "q_lm_perplexity" -> lmPerplexitySql)
+  val registry: Seq[Q] = Seq(
+    Q("q_powerlaw_tail", powerlawTail, powerlawTailSql),
+    Q("q_host_gini", hostGini, hostGiniSql),
+    Q("q_decontaminate", decontaminate, decontaminateSql),
+    Q("q_blocklist_gate", blocklistGate, blocklistGateSql),
+    Q("q_robust_outliers", robustOutliers, robustOutliersSql),
+    Q("q_dist_shift", distShift, distShiftSql),
+    Q("q_lm_perplexity", lmPerplexity, lmPerplexitySql))
 }

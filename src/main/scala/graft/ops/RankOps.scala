@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, lit, min, posexplode, sum, when}
 
@@ -562,29 +563,16 @@ object RankOps {
       |FROM ov JOIN donor ON donor.qid = ov.qid
       |GROUP BY ov.qid""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bm25_topk" -> (bm25TopK(_, _)),
-    "q_tfidf_keywords" -> (tfidfKeywords(_, _)),
-    "q_posting_sizes" -> (postingSizes(_, _)),
-    "q_self_retrieval_rank" -> (selfRetrievalRank(_, _)),
-    "q_quality_classifier" -> (qualityClassifier(_, _)),
-    "q_calibration_bins" -> (calibrationBins(_, _)),
-    "q_quality_auc" -> (qualityAuc(_, _)),
-    "q_domain_quota" -> (domainQuota(_, _)),
-    "q_dsir_select" -> (dsirSelect(_, _)),
-    "q_rrf_fusion" -> (rrfFusion(_, _)),
-    "q_inverted_index" -> (invertedIndex(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_bm25_topk" -> bm25TopKSql,
-    "q_tfidf_keywords" -> tfidfKeywordsSql,
-    "q_posting_sizes" -> postingSizesSql,
-    "q_self_retrieval_rank" -> selfRetrievalRankSql,
-    "q_quality_classifier" -> qualityClassifierSql,
-    "q_calibration_bins" -> calibrationBinsSql,
-    "q_quality_auc" -> qualityAucSql,
-    "q_domain_quota" -> domainQuotaSql,
-    "q_dsir_select" -> dsirSelectSql,
-    "q_rrf_fusion" -> rrfFusionSql,
-    "q_inverted_index" -> invertedIndexSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_bm25_topk", bm25TopK, bm25TopKSql),
+    Q("q_tfidf_keywords", tfidfKeywords, tfidfKeywordsSql),
+    Q("q_posting_sizes", postingSizes, postingSizesSql),
+    Q("q_self_retrieval_rank", selfRetrievalRank, selfRetrievalRankSql),
+    Q("q_quality_classifier", qualityClassifier, qualityClassifierSql),
+    Q("q_calibration_bins", calibrationBins, calibrationBinsSql),
+    Q("q_quality_auc", qualityAuc, qualityAucSql),
+    Q("q_domain_quota", domainQuota, domainQuotaSql),
+    Q("q_dsir_select", dsirSelect, dsirSelectSql),
+    Q("q_rrf_fusion", rrfFusion, rrfFusionSql),
+    Q("q_inverted_index", invertedIndex, invertedIndexSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -627,45 +628,24 @@ object RelationalOps {
       |FROM r
       |WHERE rn % greatest(ns // 8, 1) = 0 AND rn // greatest(ns // 8, 1) < 8""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg(_, _)),
-    "q_range_bounds" -> (rangeBounds(_, _)),
-    "q_salted_join" -> (saltedJoin(_, _)),
-    "q_q3_shipping" -> (q3Shipping(_, _)),
-    "q_asof_join" -> (asofJoin(_, _)),
-    "q_range_join" -> (rangeJoin(_, _)),
-    "q_bucketed_join" -> (bucketedJoin(_, _)),
-    "q_rollup_totals" -> (rollupTotals(_, _)),
-    "q_page_rollup" -> (pageRollup(_, _)),
-    "q_derived_fields" -> (derivedFields(_, _)),
-    "q_resume_antijoin" -> (resumeAntijoin(_, _)),
-    "q_window_first" -> (windowFirst(_, _)),
-    "q_sessionize" -> (sessionize(_, _)),
-    "q_event_funnel" -> (eventFunnel(_, _)),
-    "q_topk_per_group" -> (topkPerGroup(_, _)),
-    "q_json_extract" -> (jsonExtract(_, _)),
-    "q_date_derive" -> (dateDerive(_, _)),
-    "q_zorder_layout" -> (zorderLayout(_, _)),
-    "q_hourly_window" -> (hourlyWindow(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "q_range_bounds" -> rangeBoundsSql,
-    "q_salted_join" -> saltedJoinSql,
-    "q_q3_shipping" -> q3ShippingSql,
-    "q_asof_join" -> asofJoinSql,
-    "q_range_join" -> rangeJoinSql,
-    "q_bucketed_join" -> bucketedJoinSql,
-    "q_rollup_totals" -> rollupTotalsSql,
-    "q_page_rollup" -> pageRollupSql,
-    "q_derived_fields" -> derivedFieldsSql,
-    "q_resume_antijoin" -> resumeAntijoinSql,
-    "q_window_first" -> windowFirstSql,
-    "q_sessionize" -> sessionizeSql,
-    "q_event_funnel" -> eventFunnelSql,
-    "q_topk_per_group" -> topkPerGroupSql,
-    "q_json_extract" -> jsonExtractSql,
-    "q_date_derive" -> dateDeriveSql,
-    "q_zorder_layout" -> zorderLayoutSql,
-    "q_hourly_window" -> hourlyWindowSql)
+  val registry: Seq[Q] = Seq(
+    Q("q1_agg", q1Agg, q1AggSql),
+    Q("q_range_bounds", rangeBounds, rangeBoundsSql),
+    Q("q_salted_join", saltedJoin, saltedJoinSql),
+    Q("q_q3_shipping", q3Shipping, q3ShippingSql),
+    Q("q_asof_join", asofJoin, asofJoinSql),
+    Q("q_range_join", rangeJoin, rangeJoinSql),
+    Q("q_bucketed_join", bucketedJoin, bucketedJoinSql),
+    Q("q_rollup_totals", rollupTotals, rollupTotalsSql),
+    Q("q_page_rollup", pageRollup, pageRollupSql),
+    Q("q_derived_fields", derivedFields, derivedFieldsSql),
+    Q("q_resume_antijoin", resumeAntijoin, resumeAntijoinSql),
+    Q("q_window_first", windowFirst, windowFirstSql),
+    Q("q_sessionize", sessionize, sessionizeSql),
+    Q("q_event_funnel", eventFunnel, eventFunnelSql),
+    Q("q_topk_per_group", topkPerGroup, topkPerGroupSql),
+    Q("q_json_extract", jsonExtract, jsonExtractSql),
+    Q("q_date_derive", dateDerive, dateDeriveSql),
+    Q("q_zorder_layout", zorderLayout, zorderLayoutSql),
+    Q("q_hourly_window", hourlyWindow, hourlyWindowSql))
 }

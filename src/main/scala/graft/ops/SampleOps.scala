@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{asc, broadcast, coalesce, col, count, desc, expr, lit, posexplode, row_number, sum}
@@ -490,25 +491,14 @@ object SampleOps {
       |  st AS top_source_tokens
       |FROM r WHERE rn = 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_seq_pack" -> (seqPack(_, _)),
-    "q_shard_provenance" -> (shardProvenance(_, _)),
-    "q_token_shards" -> (tokenShards(_, _)),
-    "q_sample_stratified" -> (sampleStratified(_, _)),
-    "q_sample_fixed_k" -> (sampleFixedK(_, _)),
-    "q_sample_weighted" -> (sampleWeighted(_, _)),
-    "q_mix_temperature" -> (mixTemperature(_, _)),
-    "q_train_order" -> (trainOrder(_, _)),
-    "q_token_budget_mix" -> (tokenBudgetMix(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_seq_pack" -> seqPackSql,
-    "q_shard_provenance" -> shardProvenanceSql,
-    "q_token_shards" -> tokenShardsSql,
-    "q_sample_stratified" -> sampleStratifiedSql,
-    "q_sample_fixed_k" -> sampleFixedKSql,
-    "q_sample_weighted" -> sampleWeightedSql,
-    "q_mix_temperature" -> mixTemperatureSql,
-    "q_train_order" -> trainOrderSql,
-    "q_token_budget_mix" -> tokenBudgetMixSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_seq_pack", seqPack, seqPackSql),
+    Q("q_shard_provenance", shardProvenance, shardProvenanceSql),
+    Q("q_token_shards", tokenShards, tokenShardsSql),
+    Q("q_sample_stratified", sampleStratified, sampleStratifiedSql),
+    Q("q_sample_fixed_k", sampleFixedK, sampleFixedKSql),
+    Q("q_sample_weighted", sampleWeighted, sampleWeightedSql),
+    Q("q_mix_temperature", mixTemperature, mixTemperatureSql),
+    Q("q_train_order", trainOrder, trainOrderSql),
+    Q("q_token_budget_mix", tokenBudgetMix, tokenBudgetMixSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -329,27 +330,15 @@ object ScalarOps {
 
   // -------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_checkbox" -> (checkbox(_, _)),
-    "q_key_values" -> (keyValues(_, _)),
-    "q_camel_split" -> (camelSplit(_, _)),
-    "q_demographics" -> (demographics(_, _)),
-    "q_referral_clean" -> (referralClean(_, _)),
-    "q_fuzzy_top1" -> (fuzzyTop1(_, _)),
-    "q_token_sort_scores" -> (tokenSortScores(_, _)),
-    "q_union_branches" -> (unionBranches(_, _)),
-    "q_rolling_fp" -> (rollingFp(_, _)),
-    "q_winnowing" -> (winnowing(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_checkbox" -> checkboxSql,
-    "q_key_values" -> keyValuesSql,
-    "q_camel_split" -> camelSplitSql,
-    "q_demographics" -> demographicsSql,
-    "q_referral_clean" -> referralCleanSql,
-    "q_fuzzy_top1" -> fuzzyTop1Sql,
-    "q_token_sort_scores" -> tokenSortScoresSql,
-    "q_union_branches" -> unionBranchesSql,
-    "q_rolling_fp" -> rollingFpSql,
-    "q_winnowing" -> winnowingSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_checkbox", checkbox, checkboxSql),
+    Q("q_key_values", keyValues, keyValuesSql),
+    Q("q_camel_split", camelSplit, camelSplitSql),
+    Q("q_demographics", demographics, demographicsSql),
+    Q("q_referral_clean", referralClean, referralCleanSql),
+    Q("q_fuzzy_top1", fuzzyTop1, fuzzyTop1Sql),
+    Q("q_token_sort_scores", tokenSortScores, tokenSortScoresSql),
+    Q("q_union_branches", unionBranches, unionBranchesSql),
+    Q("q_rolling_fp", rollingFp, rollingFpSql),
+    Q("q_winnowing", winnowing, winnowingSql))
 }

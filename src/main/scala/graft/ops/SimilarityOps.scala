@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -776,31 +777,17 @@ object SimilarityOps {
        |FROM tr LEFT JOIN pq ON pq.q_id = tr.q_id AND pq.n_id = tr.n_id
        |GROUP BY tr.q_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_embed_quantize" -> (embedQuantize(_, _)),
-    "q_kmeans_assign" -> (kmeansAssign(_, _)),
-    "q_cluster_purity" -> (clusterPurity(_, _)),
-    "q_semdedup" -> (semDedup(_, _)),
-    "q_ann_brute" -> (annBrute(_, _)),
-    "q_ann_lsh" -> (annLsh(_, _)),
-    "q_ann_multiprobe" -> (annMultiprobe(_, _)),
-    "q_ann_ivf" -> (annIvf(_, _)),
-    "q_knn_label" -> (knnLabel(_, _)),
-    "q_ann_recall" -> (annRecall(_, _)),
-    "q_ann_pq" -> (annPq(_, _)),
-    "q_ann_pq_recall" -> (annPqRecall(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_embed_quantize" -> embedQuantizeSql,
-    "q_kmeans_assign" -> kmeansAssignSql,
-    "q_cluster_purity" -> clusterPuritySql,
-    "q_semdedup" -> semDedupSql,
-    "q_ann_brute" -> annBruteSql,
-    "q_ann_lsh" -> annLshSql,
-    "q_ann_multiprobe" -> annMultiprobeSql,
-    "q_ann_ivf" -> annIvfSql,
-    "q_knn_label" -> knnLabelSql,
-    "q_ann_recall" -> annRecallSql,
-    "q_ann_pq" -> annPqSql,
-    "q_ann_pq_recall" -> annPqRecallSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_embed_quantize", embedQuantize, embedQuantizeSql),
+    Q("q_kmeans_assign", kmeansAssign, kmeansAssignSql),
+    Q("q_cluster_purity", clusterPurity, clusterPuritySql),
+    Q("q_semdedup", semDedup, semDedupSql),
+    Q("q_ann_brute", annBrute, annBruteSql),
+    Q("q_ann_lsh", annLsh, annLshSql),
+    Q("q_ann_multiprobe", annMultiprobe, annMultiprobeSql),
+    Q("q_ann_ivf", annIvf, annIvfSql),
+    Q("q_knn_label", knnLabel, knnLabelSql),
+    Q("q_ann_recall", annRecall, annRecallSql),
+    Q("q_ann_pq", annPq, annPqSql),
+    Q("q_ann_pq_recall", annPqRecall, annPqRecallSql))
 }

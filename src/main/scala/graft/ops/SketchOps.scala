@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -635,25 +636,14 @@ object SketchOps {
       |FROM e CROSS JOIN s""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hll_registers" -> (hllRegisters(_, _)),
-    "q_hll_overlap" -> (hllOverlap(_, _)),
-    "q_kll_quantiles" -> (kllQuantiles(_, _)),
-    "q_cms_merge" -> (cmsMerge(_, _)),
-    "q_quantile_merge" -> (quantileMerge(_, _)),
-    "q_distinct_sketch" -> (distinctSketch(_, _)),
-    "q_heavy_hitters_cms" -> (heavyHittersCms(_, _)),
-    "q_bloom_seen" -> (bloomSeen(_, _)),
-    "q_length_quantiles" -> (lengthQuantiles(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_hll_registers" -> hllRegistersSql,
-    "q_hll_overlap" -> hllOverlapSql,
-    "q_kll_quantiles" -> kllQuantilesSql,
-    "q_cms_merge" -> cmsMergeSql,
-    "q_quantile_merge" -> quantileMergeSql,
-    "q_distinct_sketch" -> distinctSketchSql,
-    "q_heavy_hitters_cms" -> heavyHittersCmsSql,
-    "q_bloom_seen" -> bloomSeenSql,
-    "q_length_quantiles" -> lengthQuantilesSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_hll_registers", hllRegisters, hllRegistersSql),
+    Q("q_hll_overlap", hllOverlap, hllOverlapSql),
+    Q("q_kll_quantiles", kllQuantiles, kllQuantilesSql),
+    Q("q_cms_merge", cmsMerge, cmsMergeSql),
+    Q("q_quantile_merge", quantileMerge, quantileMergeSql),
+    Q("q_distinct_sketch", distinctSketch, distinctSketchSql),
+    Q("q_heavy_hitters_cms", heavyHittersCms, heavyHittersCmsSql),
+    Q("q_bloom_seen", bloomSeen, bloomSeenSql),
+    Q("q_length_quantiles", lengthQuantiles, lengthQuantilesSql))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1454,69 +1455,36 @@ object TextOps {
       |UNION ALL SELECT CAST(4 AS BIGINT), 'repetition', s4 FROM s
       |UNION ALL SELECT CAST(5 AS BIGINT), 'stopword_quality', s5 FROM s""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bpe_train" -> (bpeTrain(_, _)),
-    "q_quality_funnel" -> (qualityFunnel(_, _)),
-    "q_bpe_apply" -> (bpeApply(_, _)),
-    "q_token_fertility" -> (tokenFertility(_, _)),
-    "q_oov_rate_bpe" -> (oovRateBpe(_, _)),
-    "q_readability" -> (readability(_, _)),
-    "q_pmi_collocations" -> (pmiCollocations(_, _)),
-    "q_oov_rate" -> (oovRate(_, _)),
-    "q_wordpiece_tokens" -> (wordpieceTokens(_, _)),
-    "q_corpus_clean" -> (corpusClean(_, _)),
-    "q_mojibake_repair" -> (mojibakeRepair(_, _)),
-    "q_dedup_key" -> (dedupKeyQ(_, _)),
-    "q_norm_gain" -> (normGain(_, _)),
-    "q_script_mix" -> (scriptMixQ(_, _)),
-    "q_c4_line_filter" -> (c4LineFilterQ(_, _)),
-    "q_type_token_ratio" -> (typeTokenRatio(_, _)),
-    "q_token_count" -> (tokenCount(_, _)),
-    "q_lang_id" -> (langId(_, _)),
-    "q_lang_agreement" -> (langAgreement(_, _)),
-    "q_host_lang_entropy" -> (hostLangEntropy(_, _)),
-    "q_lang_id_cjk" -> (langIdCjk(_, _)),
-    "q_quality" -> (quality(_, _)),
-    "q_gopher_quality" -> (gopherQuality(_, _)),
-    "q_repetition_gate" -> (repetitionGate(_, _)),
-    "q_char_entropy" -> (charEntropy(_, _)),
-    "q_fingerprint" -> (fingerprint(_, _)),
-    "q_url_parse" -> (urlParse(_, _)),
-    "q_url_canon" -> (urlCanon(_, _)),
-    "q_pii_scrub" -> (piiScrub(_, _)),
-    "q_bpe_tokens" -> (bpeTokens(_, _)),
-    "q_host_quality" -> (hostQuality(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_readability" -> readabilitySql,
-    "q_quality_funnel" -> qualityFunnelSql,
-    "q_pmi_collocations" -> pmiCollocationsSql,
-    "q_oov_rate" -> oovRateSql,
-    "q_bpe_train" -> bpeTrainSql,
-    "q_bpe_apply" -> bpeApplySql,
-    "q_token_fertility" -> tokenFertilitySql,
-    "q_oov_rate_bpe" -> oovRateBpeSql,
-    "q_wordpiece_tokens" -> wordpieceTokensSql,
-    "q_corpus_clean" -> corpusCleanSql,
-    "q_mojibake_repair" -> mojibakeRepairSql,
-    "q_dedup_key" -> dedupKeySql,
-    "q_norm_gain" -> normGainSql,
-    "q_script_mix" -> scriptMixSql,
-    "q_c4_line_filter" -> c4LineFilterSql,
-    "q_type_token_ratio" -> typeTokenRatioSql,
-    "q_token_count" -> tokenCountSql,
-    "q_lang_id" -> langIdSql,
-    "q_lang_agreement" -> langAgreementSql,
-    "q_host_lang_entropy" -> hostLangEntropySql,
-    "q_lang_id_cjk" -> langIdCjkSql,
-    "q_quality" -> qualitySql,
-    "q_gopher_quality" -> gopherQualitySql,
-    "q_char_entropy" -> charEntropySql,
-    "q_repetition_gate" -> repetitionGateSql,
-    "q_fingerprint" -> fingerprintSql,
-    "q_url_parse" -> urlParseSql,
-    "q_url_canon" -> urlCanonSql,
-    "q_pii_scrub" -> piiScrubSql,
-    "q_bpe_tokens" -> bpeTokensSql,
-    "q_host_quality" -> hostQualitySql)
+  val registry: Seq[Q] = Seq(
+    Q("q_bpe_train", bpeTrain, bpeTrainSql),
+    Q("q_quality_funnel", qualityFunnel, qualityFunnelSql),
+    Q("q_bpe_apply", bpeApply, bpeApplySql),
+    Q("q_token_fertility", tokenFertility, tokenFertilitySql),
+    Q("q_oov_rate_bpe", oovRateBpe, oovRateBpeSql),
+    Q("q_readability", readability, readabilitySql),
+    Q("q_pmi_collocations", pmiCollocations, pmiCollocationsSql),
+    Q("q_oov_rate", oovRate, oovRateSql),
+    Q("q_wordpiece_tokens", wordpieceTokens, wordpieceTokensSql),
+    Q("q_corpus_clean", corpusClean, corpusCleanSql),
+    Q("q_mojibake_repair", mojibakeRepair, mojibakeRepairSql),
+    Q("q_dedup_key", dedupKeyQ, dedupKeySql),
+    Q("q_norm_gain", normGain, normGainSql),
+    Q("q_script_mix", scriptMixQ, scriptMixSql),
+    Q("q_c4_line_filter", c4LineFilterQ, c4LineFilterSql),
+    Q("q_type_token_ratio", typeTokenRatio, typeTokenRatioSql),
+    Q("q_token_count", tokenCount, tokenCountSql),
+    Q("q_lang_id", langId, langIdSql),
+    Q("q_lang_agreement", langAgreement, langAgreementSql),
+    Q("q_host_lang_entropy", hostLangEntropy, hostLangEntropySql),
+    Q("q_lang_id_cjk", langIdCjk, langIdCjkSql),
+    Q("q_quality", quality, qualitySql),
+    Q("q_gopher_quality", gopherQuality, gopherQualitySql),
+    Q("q_repetition_gate", repetitionGate, repetitionGateSql),
+    Q("q_char_entropy", charEntropy, charEntropySql),
+    Q("q_fingerprint", fingerprint, fingerprintSql),
+    Q("q_url_parse", urlParse, urlParseSql),
+    Q("q_url_canon", urlCanon, urlCanonSql),
+    Q("q_pii_scrub", piiScrub, piiScrubSql),
+    Q("q_bpe_tokens", bpeTokens, bpeTokensSql),
+    Q("q_host_quality", hostQuality, hostQualitySql))
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Q
 import graft.pipeline.ExtractPipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -747,25 +748,14 @@ object StreamingOps {
       |SELECT CAST(ts_us // span AS BIGINT) AS widx, CAST(count(*) AS BIGINT) AS n
       |FROM b GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stream_join" -> (streamJoin(_, _)),
-    "q_stream_left_join" -> (streamLeftJoin(_, _)),
-    "q_stream_late" -> (streamLate(_, _)),
-    "q_stream_upsert" -> (streamUpsert(_, _)),
-    "q_stream_dedup" -> (streamDedup(_, _)),
-    "q_stream_dedup_evict" -> (streamDedupEvict(_, _)),
-    "q_stream_host_slots" -> (streamHostSlots(_, _)),
-    "q_stream_hourly" -> (streamHourlyEvents(_, _)),
-    "q_stream_sessionize" -> (streamSessionize(_, _)))
-
-  def oracles: Map[String, String] = Map(
-    "q_stream_join" -> streamJoinSql,
-    "q_stream_left_join" -> streamLeftJoinSql,
-    "q_stream_late" -> streamLateSql,
-    "q_stream_upsert" -> streamUpsertSql,
-    "q_stream_dedup" -> streamDedupSql,
-    "q_stream_dedup_evict" -> streamDedupEvictSql,
-    "q_stream_host_slots" -> streamHostSlotsSql,
-    "q_stream_hourly" -> streamHourlyEventsSql,
-    "q_stream_sessionize" -> streamSessionizeSql)
+  val registry: Seq[Q] = Seq(
+    Q("q_stream_join", streamJoin, streamJoinSql),
+    Q("q_stream_left_join", streamLeftJoin, streamLeftJoinSql),
+    Q("q_stream_late", streamLate, streamLateSql),
+    Q("q_stream_upsert", streamUpsert, streamUpsertSql),
+    Q("q_stream_dedup", streamDedup, streamDedupSql),
+    Q("q_stream_dedup_evict", streamDedupEvict, streamDedupEvictSql),
+    Q("q_stream_host_slots", streamHostSlots, streamHostSlotsSql),
+    Q("q_stream_hourly", streamHourlyEvents, streamHourlyEventsSql),
+    Q("q_stream_sessionize", streamSessionize, streamSessionizeSql))
 }

@@ -13,12 +13,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .getOrCreate()
+  /** Specs run on 4 cores on any host, so partition counts stay fixed. */
+  val cpus = 4
+  lazy val session: SparkSession = SparkEntry.localSession("graft-test", cpus)
 }

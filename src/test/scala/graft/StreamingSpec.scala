@@ -137,7 +137,7 @@ class StreamingSpec extends SparkTestBase {
       .filter(t => t.isTemporary && t.name.startsWith("stream_")).map(_.name)
 
   test("every q_stream_* query drains, materializes and leaves nothing behind") {
-    StreamingOps.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    StreamingOps.registry.sortBy(_.name).foreach { case Q(name, fn, _) =>
       val before = stageDirs()
       val out = fn(spark, "/root/testdata/sf0.001")
       assert(spark.streams.active.isEmpty, name)
