@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.kernels.{ExtractKernel, HtmlCharset, MainTextExtractor, PdfTextExtractor}
+import graft.kernels.ExtractKernel
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,14 +11,17 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** `extract_doc(html binary) -> struct<text string, n_chars int, kind
   * string>` — the struct-returning sibling of `extract_main_text`: one
-  * codegen'd call yields the extracted text, its length, and the sniffed
-  * document kind, so the expression-only fast path can carry the dispatch
-  * outcome without a Dataset encoder or a second kernel invocation.
+  * codegen'd call into `ExtractKernel.extract` yields the extracted text,
+  * its length in code points (`UTF8String.numChars`, where the typed
+  * path's `ExtractedDoc.n_chars` counts UTF-16 units), and the document
+  * kind, so the expression-only fast path can carry the dispatch outcome
+  * without a Dataset encoder or a second kernel invocation.
   *
   * Failure shape matches the library contract: text is null (and n_chars
-  * 0) for empty input, failed PDFs, oversized-upstream-filtered rows, or
-  * a kernel fault (per-row catch); `kind` always reflects the magic-byte
-  * sniff (reference dispatch analog api.py:123-125).
+  * 0) for empty input, corrupt transports, failed PDFs, or a kernel
+  * fault (the kernel's per-row catch); `kind` is the typed path's
+  * `doc_kind` (reference dispatch analog api.py:123-125): the magic-byte
+  * sniff of the decoded payload, `html` for a corrupt transport.
   */
 case class ExtractDoc(child: Expression) extends UnaryExpression {
 
@@ -54,26 +57,10 @@ object ExtractDoc {
   /** Shared by interpreted eval and generated code; always returns a row
     * (never null) — text null is the failure shape.
     */
-  def evalBytes(bytes0: Array[Byte]): InternalRow = {
-    val bytes =
-      if (ExtractKernel.transportOf(bytes0) != null)
-        ExtractKernel.decompressTransport(bytes0).orNull // corrupt transport -> null text below
-      else bytes0
-    val kind = ExtractKernel.sniff(bytes)
-    val text: UTF8String =
-      try {
-        kind match {
-          case ExtractKernel.KindPassthrough => null
-          case ExtractKernel.KindPdf =>
-            val res = PdfTextExtractor.extract(bytes)
-            if (res.pages.isEmpty) null
-            else UTF8String.fromString(res.pages.map(_.text).mkString("\n"))
-          case _ =>
-            UTF8String.fromString(MainTextExtractor.extract(HtmlCharset.decode(bytes)).text)
-        }
-      } catch { case _: Throwable => null }
-    val n = if (text == null) 0 else text.numChars()
-    InternalRow(text, n, UTF8String.fromString(kind))
+  def evalBytes(bytes: Array[Byte]): InternalRow = {
+    val d = ExtractKernel.extract(bytes)
+    val text = if (d.text == null) null else UTF8String.fromString(d.text)
+    InternalRow(text, if (text == null) 0 else text.numChars(), UTF8String.fromString(d.kind))
   }
 
   val fnName: FunctionIdentifier = FunctionIdentifier("extract_doc")

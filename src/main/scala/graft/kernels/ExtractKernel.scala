@@ -1,14 +1,14 @@
 package graft.kernels
 
-import graft.model.{ExtractedPage, PageRow, Span}
+import graft.model.Span
 
 /** Per-row extraction dispatch: content sniffing + kernel invocation +
   * poison-pill isolation (SURVEY §2.2 "extension dispatch" re-expressed as
   * content sniffing on magic bytes — the reference dispatched on filename
   * extension, api.py:123-125; we dispatch on `%PDF-` vs HTML-ish bytes).
   *
-  * Errors never fail the Spark task: a failing document emits a row with
-  * `error` set and empty text (reference analog: per-request try/except,
+  * Errors never fail the Spark task: a failing document comes back with
+  * `error` set and no text (reference analog: per-request try/except,
   * api.py:291-336).
   */
 object ExtractKernel {
@@ -72,54 +72,61 @@ object ExtractKernel {
   def gunzip(bytes: Array[Byte], maxOut: Int = 64 * 1024 * 1024): Option[Array[Byte]] =
     if (isGzip(bytes)) decompressTransport(bytes, maxOut) else None
 
-  /** Extract all pages of one input row. HTML and passthrough rows emit
-    * exactly one page (page_no 0); PDFs emit one page per content stream.
+  /** One extracted document: `text` is null exactly when `error` is set
+    * or there are no bytes (`kind` passthrough); `pageCount` is the
+    * number of PDF pages joined, 1 for every other document.
     */
-  def extractPages(row0: PageRow): Iterator[ExtractedPage] = {
-    // transparent transport decode (content sniffing happens on the
-    // decompressed payload); a corrupt compressed body is an error row,
-    // never a task failure
-    val codec = transportOf(row0.html)
-    val row =
-      if (codec == null) row0
-      else decompressTransport(row0.html) match {
-        case Some(b) => row0.copy(html = b)
-        case None =>
-          return Iterator.single(ExtractedPage(row0.url, 0, row0.warc_ts,
-            KindHtml, "", Seq.empty, s"${codec}_corrupt"))
+  final case class Doc(kind: String, text: String, spans: Array[Span], pageCount: Int,
+      error: String)
+
+  private val NoSpans = Array.empty[Span]
+  private val NoBytes = Doc(KindPassthrough, null, NoSpans, 1, null)
+
+  /** The one per-document dispatch: transport decode, magic-byte sniff,
+    * then the HTML or PDF kernel. PDF pages (already in page-tree order)
+    * join with '\n', spans re-offset into the concatenation. A failing
+    * document returns an error Doc, never throws.
+    */
+  def extract(raw: Array[Byte]): Doc = {
+    // a corrupt compressed body is an error Doc, never a task failure
+    val codec = transportOf(raw)
+    val bytes =
+      if (codec == null) raw
+      else decompressTransport(raw) match {
+        case Some(b) => b
+        case None => return Doc(KindHtml, null, NoSpans, 1, s"${codec}_corrupt")
       }
+    val kind = sniff(bytes)
     try {
-      sniff(row.html) match {
-        case KindPassthrough =>
-          val t = if (row.text == null) "" else row.text
-          val kind = if (t.isEmpty) KindEmpty else KindPassthrough
-          val spans =
-            if (t.isEmpty) Seq.empty[Span] else Seq(Span(0, t.length, "text"))
-          Iterator.single(ExtractedPage(row.url, 0, row.warc_ts, kind, t, spans, null))
+      kind match {
+        case KindPassthrough => NoBytes
         case KindPdf =>
-          val res = PdfTextExtractor.extract(row.html)
-          if (res.pages.isEmpty) {
+          val res = PdfTextExtractor.extract(bytes)
+          val pages = res.pages
+          if (pages.isEmpty) {
             val err =
-              if (res.unsupported > 0) s"pdf_unsupported:${res.unsupported}"
-              else "pdf_empty"
-            Iterator.single(
-              ExtractedPage(row.url, 0, row.warc_ts, KindPdf, "", Seq.empty, err))
-          } else {
-            res.pages.iterator.map { p =>
-              ExtractedPage(row.url, p.page_no, row.warc_ts, KindPdf, p.text,
-                p.spans.toSeq, null)
+              if (res.unsupported > 0) s"pdf_unsupported:${res.unsupported}" else "pdf_empty"
+            Doc(KindPdf, null, NoSpans, 1, err)
+          } else if (pages.length == 1) Doc(KindPdf, pages(0).text, pages(0).spans, 1, null)
+          else {
+            val sb = new java.lang.StringBuilder(256)
+            val spans = Array.newBuilder[Span]
+            pages.foreach { p =>
+              if (sb.length > 0) sb.append('\n')
+              val off = sb.length
+              sb.append(p.text)
+              p.spans.foreach(s => spans += Span(s.begin + off, s.end + off, s.kind))
             }
+            Doc(KindPdf, sb.toString, spans.result(), pages.length, null)
           }
         case _ =>
-          val html = HtmlCharset.decode(row.html)
-          val ex = MainTextExtractor.extract(html)
-          Iterator.single(
-            ExtractedPage(row.url, 0, row.warc_ts, KindHtml, ex.text, ex.spans.toSeq, null))
+          val ex = MainTextExtractor.extract(HtmlCharset.decode(bytes))
+          Doc(KindHtml, ex.text, ex.spans, 1, null)
       }
     } catch {
       case e: Throwable =>
-        Iterator.single(ExtractedPage(row.url, 0, row.warc_ts, sniff(row.html), "",
-          Seq.empty, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
+        Doc(kind, null, NoSpans, 1,
+          s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
     }
   }
 }

@@ -20,28 +20,16 @@ final case class PageRow(
   */
 final case class Span(begin: Int, end: Int, kind: String)
 
-/** One extracted page. PDF documents explode to one row per page
-  * (reference: per-page loop api.py:217-228); HTML is always page 0.
-  */
-final case class ExtractedPage(
-    url: String,
-    page_no: Int,
-    warc_ts: Timestamp,
-    doc_kind: String, // html | pdf | passthrough | empty
-    text: String,
-    spans: Seq[Span],
-    error: String) // null = ok; poison-pill isolation (SURVEY §2.9)
-
 /** Final per-document record: the page->document rollup of the reference's
   * combined JSON `{page_count, pages:[...]}` (api.py:261-269).
   */
 final case class ExtractedDoc(
     url: String,
     warc_ts: Timestamp,
-    doc_kind: String,
+    doc_kind: String, // html | pdf | passthrough | empty
     page_count: Int,
     text: String,
     spans: Seq[Span],
-    n_chars: Int,
+    n_chars: Int, // text.length: UTF-16 code units, not code points
     lang: String,
-    error: String)
+    error: String) // null = ok; poison-pill isolation (SURVEY §2.9)

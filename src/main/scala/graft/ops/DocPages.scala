@@ -70,11 +70,11 @@ object DocPages {
   }
 
   /** Multi-page PDF: every 40-word chunk becomes its OWN page (one Tj
-    * line per page), so the kernel must emit one ExtractedPage per page
-    * and mergePages must rejoin them '\n'-joined in page-tree order —
-    * the reference's combined `{page_count, pages:[...]}` document
-    * (api.py:261-269; golden outputs/2025-03-20/w_f_abbasia.json has
-    * page_count 2). Compression alternates per doc so both stream
+    * line per page), so the PDF kernel must emit one page per page object
+    * and ExtractKernel.extract must rejoin them '\n'-joined in page-tree
+    * order — the reference's combined `{page_count, pages:[...]}`
+    * document (api.py:261-269; golden outputs/2025-03-20/w_f_abbasia.json
+    * has page_count 2). Compression alternates per doc so both stream
     * branches run.
     */
   def pdfMulti(spark: SparkSession, dir: String, n: Int = 40): Dataset[PageRow] = {

@@ -392,10 +392,11 @@ object ExtractionOps {
     extracted(spark, DocPages.pdfEncrypted(spark, dir))
       .select(col("doc_id"), col("extracted_text"))
 
-  /** Multi-page PDF → one combined document: the kernel emits one page
-    * per PDF page object, mergePages '\n'-joins them in page order and
-    * reports page_count — the reference's `{page_count, pages:[...]}`
-    * rollup (api.py:261-269) under the DuckDB oracle end-to-end.
+  /** Multi-page PDF → one combined document: the PDF kernel emits one
+    * page per PDF page object, ExtractKernel.extract '\n'-joins them in
+    * page order and reports page_count — the reference's
+    * `{page_count, pages:[...]}` rollup (api.py:261-269) under the DuckDB
+    * oracle end-to-end.
     */
   def extractPdfMultipage(spark: SparkSession, dir: String): DataFrame =
     extracted(spark, DocPages.pdfMulti(spark, dir))

@@ -48,9 +48,8 @@ object ExtractJob {
       if (committedDays.isEmpty) withDay
       else withDay.filter(!col("p_day").isin(committedDays.toSeq: _*))
 
-    val metrics = new ExtractPipeline.Metrics(spark)
     val extracted = ExtractPipeline
-      .extract(spark, todo.drop("p_day"), conf, metrics)
+      .extract(spark, todo.drop("p_day"), conf)
       .withColumn("p_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
 
     // idempotent partition replace through the TableFormat seam: only the
@@ -84,7 +83,10 @@ object ExtractJob {
       Ledger.commit(ledgerDir,
         Ledger.Entry(s"p_day=${s.day}", s.rows, s.chars, s.errors, wallMs, now, snap))
     }
-    Result(stats.toSeq, committedDays.size, metrics.docsOk.value,
-      metrics.docsFailed.value, wallMs)
+    // counts from the written data, so they equal the ledger rows this
+    // run committed (a retried task's rows are written once, counted once)
+    val docsFailed = stats.map(_.errors).sum
+    Result(stats.toSeq, committedDays.size, stats.map(_.rows).sum - docsFailed,
+      docsFailed, wallMs)
   }
 }

@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import graft.kernels.ExtractKernel
-import graft.model.{ExtractedDoc, ExtractedPage, PageRow, Span}
+import graft.model.{ExtractedDoc, PageRow, Span}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
+import scala.collection.immutable.ArraySeq
 
 /** Spark wiring of the extraction kernel (SURVEY.md §7.1 `pipeline`).
   *
@@ -62,60 +62,29 @@ object ExtractPipeline {
   final case class Conf(repartition: Int = 0, maxBytes: Int = 64 << 20,
       hostSalt: Int = 0, postShuffle: Boolean = true)
 
-  /** Task-side counters (lineage/metrics, BASELINE.json north rule). */
-  final class Metrics(spark: SparkSession) extends Serializable {
-    val docsOk: LongAccumulator = spark.sparkContext.longAccumulator("graft.docs_ok")
-    val docsFailed: LongAccumulator = spark.sparkContext.longAccumulator("graft.docs_failed")
-    val pagesOut: LongAccumulator = spark.sparkContext.longAccumulator("graft.pages_out")
-    val bytesIn: LongAccumulator = spark.sparkContext.longAccumulator("graft.bytes_in")
-  }
-
-  /** Merge a document's extracted pages (already local — all pages of a
-    * url come from its single input row): texts join with '\n' in page
-    * order, spans re-offset into the concatenation. Mirrors the combined
-    * `{page_count, pages:[...]}` JSON of the reference (api.py:261-269).
+  /** Extract one document with the size cap applied; rows without html
+    * bytes carry the crawl-provided text through (kind passthrough, or
+    * empty when there is none).
     */
-  def mergePages(row: PageRow, pages: Seq[ExtractedPage]): ExtractedDoc = {
-    if (pages.length == 1) {
-      // fast path for the dominant single-page case: no text re-copy, no
-      // span re-offset — cuts per-doc allocation in the hot loop
-      val p = pages.head
-      return ExtractedDoc(row.url, row.warc_ts, p.doc_kind, 1, p.text,
-        p.spans, p.text.length, row.lang, p.error)
-    }
-    val sorted = pages.sortBy(_.page_no)
-    val sb = new java.lang.StringBuilder(256)
-    val spans = Seq.newBuilder[Span]
-    sorted.foreach { p =>
-      if (sb.length > 0) sb.append('\n')
-      val off = sb.length
-      sb.append(p.text)
-      p.spans.foreach(s => spans += Span(s.begin + off, s.end + off, s.kind))
-    }
-    val err = sorted.iterator.map(_.error).find(_ != null).orNull
-    val kind = sorted.headOption.map(_.doc_kind).getOrElse(ExtractKernel.KindEmpty)
-    val text = sb.toString
-    ExtractedDoc(row.url, row.warc_ts, kind, sorted.length, text, spans.result(),
-      text.length, row.lang, err)
-  }
-
-  /** Extract one document (all pages) with the size cap applied. */
-  def extractDoc(row: PageRow, maxBytes: Int, m: Metrics): ExtractedDoc = {
+  def extractDoc(row: PageRow, maxBytes: Int): ExtractedDoc = {
     val size = if (row.html == null) 0 else row.html.length
-    if (m != null) m.bytesIn.add(size.toLong)
-    val doc =
-      if (size > maxBytes)
-        ExtractedDoc(row.url, row.warc_ts, ExtractKernel.sniff(row.html), 0, "",
-          Seq.empty, 0, row.lang, s"too_large:$size")
-      else {
-        val pages = ExtractKernel.extractPages(row).toVector
-        mergePages(row, pages)
-      }
-    if (m != null) {
-      if (doc.error == null) m.docsOk.add(1L) else m.docsFailed.add(1L)
-      m.pagesOut.add(doc.page_count.toLong)
+    if (size > maxBytes)
+      return ExtractedDoc(row.url, row.warc_ts, ExtractKernel.sniff(row.html), 0, "",
+        Seq.empty, 0, row.lang, s"too_large:$size")
+    val d = ExtractKernel.extract(row.html)
+    if (d.kind == ExtractKernel.KindPassthrough) {
+      val t = if (row.text == null) "" else row.text
+      if (t.isEmpty)
+        ExtractedDoc(row.url, row.warc_ts, ExtractKernel.KindEmpty, 1, t, Seq.empty, 0,
+          row.lang, null)
+      else
+        ExtractedDoc(row.url, row.warc_ts, ExtractKernel.KindPassthrough, 1, t,
+          Seq(Span(0, t.length, "text")), t.length, row.lang, null)
+    } else {
+      val t = if (d.text == null) "" else d.text
+      ExtractedDoc(row.url, row.warc_ts, d.kind, d.pageCount, t,
+        ArraySeq.unsafeWrapArray(d.spans), t.length, row.lang, d.error)
     }
-    doc
   }
 
   /** The explicit url-hash exchange, applicable to any plan with a `url`
@@ -134,29 +103,31 @@ object ExtractPipeline {
     else ds
 
   /** pages(url, warc_ts, html, text, lang) → Dataset[ExtractedDoc]. */
-  def extract(spark: SparkSession, pages: DataFrame, conf: Conf = Conf(),
-      metrics: Metrics = null): Dataset[ExtractedDoc] = {
+  def extract(spark: SparkSession, pages: DataFrame, conf: Conf = Conf()): Dataset[ExtractedDoc] = {
     import spark.implicits._
     val maxBytes = conf.maxBytes
     val input = if (conf.postShuffle) pages else keyedBy(pages.toDF(), conf)
     val docs = input
       .select("url", "warc_ts", "html", "text", "lang")
       .as[PageRow]
-      .mapPartitions { it => it.map(r => extractDoc(r, maxBytes, metrics)) }
+      .mapPartitions { it => it.map(r => extractDoc(r, maxBytes)) }
     if (conf.postShuffle) keyedBy(docs, conf) else docs
   }
 
   /** Expression-only fast path: text extraction as a codegen'd projection
-    * (`extract_main_text`), no Dataset encoder round-trip — measured ~38%
-    * faster than the typed path at local[32] (297k vs 215k docs/s on the
-    * 1.2M-doc corpus). Emits (url, warc_ts, lang, text, n_chars) only:
-    * consumers needing spans, page counts, or the error string use
-    * [[extract]]. text=null is the single failure shape here — oversized
-    * blobs, failed PDFs, and kernel faults (the expression catches
-    * per-row, mirroring the typed path's poison-pill isolation) all map
-    * to null. Crawl-provided `text` surfaces ONLY for rows with no html
-    * bytes (the passthrough branch), never as a fallback for failed
-    * extraction — same branch the typed path takes.
+    * (`extract_main_text`), no Dataset encoder round-trip. Which path is
+    * faster depends on the host: expression vs typed read 496k vs 397k
+    * docs/s at local[32] on a 32-core host (`BENCH_r05.json`) and 67.3k
+    * vs 66.5k at local[4] on a 4-core host, where jobbench's
+    * `pipeline.encoder_cpu_ns_per_doc` reads about -530 ns/doc (the typed
+    * path costs less CPU). Emits (url, warc_ts, lang, text, n_chars)
+    * only, n_chars in code points: consumers needing spans, page counts,
+    * or the error string use [[extract]]. text=null is the single failure
+    * shape here — oversized blobs, failed PDFs, corrupt transports and
+    * kernel faults (the same `ExtractKernel.extract` per-row catch as the
+    * typed path) all map to null. Crawl-provided `text` surfaces ONLY for
+    * rows with no html bytes (the passthrough branch), never as a
+    * fallback for failed extraction — same branch the typed path takes.
     */
   def extractText(spark: SparkSession, pages: DataFrame, conf: Conf = Conf()): DataFrame = {
     graft.functions.ExtractMainText.register(spark) // idempotent
@@ -171,23 +142,5 @@ object ExtractPipeline {
           .as("text"))
       .withColumn("n_chars", coalesce(length(col("text")), lit(0)))
     if (conf.postShuffle) keyedBy(out, conf) else out
-  }
-
-  /** Relational page→doc rollup for the general case where pages of one
-    * document arrive as separate rows (reference multi-page combined JSON,
-    * api.py:261-269). Order-correct via sort_array on page_no — never
-    * relies on collect_list arrival order (SURVEY §7.4 hard part #5).
-    */
-  def rollupPages(pages: DataFrame): DataFrame = {
-    pages
-      .groupBy(col("url"))
-      .agg(
-        count(lit(1)).cast("int").as("page_count"),
-        array_join(
-          transform(
-            sort_array(collect_list(struct(col("page_no"), col("text")))),
-            p => p.getField("text")),
-          "\n").as("text"),
-        min(col("warc_ts")).as("warc_ts"))
   }
 }

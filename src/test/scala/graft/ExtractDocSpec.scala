@@ -32,6 +32,20 @@ class ExtractDocSpec extends SparkTestBase {
     assert(nul.isNullAt(0))
   }
 
+  test("corrupt gzip/zstd transport -> null text, kind html (the typed path's doc_kind)") {
+    ExtractDoc.register(spark)
+    val body = "<p>alpha beta gamma delta epsilon zeta eta theta</p>".getBytes("UTF-8")
+    val rows = Seq(
+      graft.gen.PagesGen.deflateGzip(body).take(8),
+      com.github.luben.zstd.Zstd.compress(body, 3).take(6))
+      .toDF("html").selectExpr("extract_doc(html) AS d").collect()
+    assert(rows.length == 2)
+    rows.foreach { r =>
+      val d = r.getStruct(0)
+      assert(d.isNullAt(0) && d.getInt(1) == 0 && d.getString(2) == "html")
+    }
+  }
+
   test("codegen path over a range scan matches per-row eval") {
     ExtractDoc.register(spark)
     val rows = spark.range(50)

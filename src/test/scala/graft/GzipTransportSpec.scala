@@ -1,7 +1,6 @@
 package graft
 
 import graft.kernels.ExtractKernel
-import graft.model.PageRow
 import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,55 +17,52 @@ class GzipTransportSpec extends AnyFunSuite {
     bos.toByteArray
   }
 
-  private def page(html: Array[Byte]) =
-    PageRow("u://gz", new java.sql.Timestamp(0), html, "", "en")
-
   test("gzip'd HTML decompresses then extracts normally") {
     val html = graft.gen.PagesGen.htmlPage(Seq("main content body here"), None, 1L)
-    val out = ExtractKernel.extractPages(page(gz(html.getBytes(UTF_8)))).toSeq
-    assert(out.size === 1)
-    assert(out.head.error === null)
-    assert(out.head.doc_kind === "html")
-    assert(out.head.text === "main content body here")
+    val out = ExtractKernel.extract(gz(html.getBytes(UTF_8)))
+    assert(out.pageCount === 1)
+    assert(out.error === null)
+    assert(out.kind === "html")
+    assert(out.text === "main content body here")
   }
 
   test("gzip'd PDF is sniffed as pdf AFTER decompression") {
     val pdf = graft.gen.PagesGen.pdfBytes(Seq(Seq("pdf inside gzip")), compress = false)
-    val out = ExtractKernel.extractPages(page(gz(pdf))).toSeq
-    assert(out.head.doc_kind === "pdf")
-    assert(out.head.text === "pdf inside gzip")
+    val out = ExtractKernel.extract(gz(pdf))
+    assert(out.kind === "pdf")
+    assert(out.text === "pdf inside gzip")
   }
 
   test("corrupt gzip is an error row, never a task failure") {
     val corrupt = gz("hello".getBytes(UTF_8)).take(8) // truncated stream
-    val out = ExtractKernel.extractPages(page(corrupt)).toSeq
-    assert(out.size === 1)
-    assert(out.head.error === "gzip_corrupt")
-    assert(out.head.text === "")
+    val out = ExtractKernel.extract(corrupt)
+    assert(out.pageCount === 1)
+    assert(out.error === "gzip_corrupt")
+    assert(out.text === null)
   }
 
   test("zstd'd HTML decompresses then extracts normally") {
     val html = graft.gen.PagesGen.htmlPage(Seq("zstd main content"), None, 1L)
-    val out = ExtractKernel.extractPages(page(zst(html.getBytes(UTF_8)))).toSeq
-    assert(out.size === 1)
-    assert(out.head.error === null)
-    assert(out.head.doc_kind === "html")
-    assert(out.head.text === "zstd main content")
+    val out = ExtractKernel.extract(zst(html.getBytes(UTF_8)))
+    assert(out.pageCount === 1)
+    assert(out.error === null)
+    assert(out.kind === "html")
+    assert(out.text === "zstd main content")
   }
 
   test("zstd'd PDF is sniffed as pdf AFTER decompression") {
     val pdf = graft.gen.PagesGen.pdfBytes(Seq(Seq("pdf inside zstd")), compress = false)
-    val out = ExtractKernel.extractPages(page(zst(pdf))).toSeq
-    assert(out.head.doc_kind === "pdf")
-    assert(out.head.text === "pdf inside zstd")
+    val out = ExtractKernel.extract(zst(pdf))
+    assert(out.kind === "pdf")
+    assert(out.text === "pdf inside zstd")
   }
 
   test("corrupt zstd is an error row tagged with its codec") {
     val corrupt = zst("hello zstd stream content".getBytes(UTF_8)).take(6)
-    val out = ExtractKernel.extractPages(page(corrupt)).toSeq
-    assert(out.size === 1)
-    assert(out.head.error === "zstd_corrupt")
-    assert(out.head.text === "")
+    val out = ExtractKernel.extract(corrupt)
+    assert(out.pageCount === 1)
+    assert(out.error === "zstd_corrupt")
+    assert(out.text === null)
   }
 
   test("zstd bomb guard bounds output size") {

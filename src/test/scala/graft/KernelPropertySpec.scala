@@ -89,7 +89,7 @@ class KernelPropertySpec extends AnyFunSuite {
     } yield (i, seed)
     check("golden-all-seeds", Prop.forAll(gen) { case (i, seed) =>
       val gp = PagesGen.genPage(i, seed)
-      val doc = ExtractPipeline.extractDoc(gp.row, 64 << 20, null)
+      val doc = ExtractPipeline.extractDoc(gp.row, 64 << 20)
       doc.error == null && doc.text == gp.expected && spansValid(doc.text, doc.spans.toArray)
     })
   }

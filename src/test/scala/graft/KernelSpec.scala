@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernels.{ExtractKernel, MainTextExtractor, PdfTextExtractor}
 import graft.gen.PagesGen
+import graft.pipeline.ExtractPipeline
 import java.nio.charset.StandardCharsets.UTF_8
 
 class KernelSpec extends AnyFunSuite {
@@ -18,11 +19,10 @@ class KernelSpec extends AnyFunSuite {
   test("html: corpus golden round-trip is byte-identical (500 rows)") {
     val pages = PagesGen.corpus(500, seed = 42L)
     pages.foreach { gp =>
-      val rows = ExtractKernel.extractPages(gp.row).toVector
-      assert(rows.forall(_.error == null), s"${gp.row.url}: ${rows.map(_.error)}")
-      val text = rows.sortBy(_.page_no).map(_.text).mkString("\n")
-      assert(text == gp.expected,
-        s"${gp.kind} ${gp.row.url}\n--- got ---\n$text\n--- want ---\n${gp.expected}")
+      val doc = ExtractPipeline.extractDoc(gp.row, 64 << 20)
+      assert(doc.error == null, s"${gp.row.url}: ${doc.error}")
+      assert(doc.text == gp.expected,
+        s"${gp.kind} ${gp.row.url}\n--- got ---\n${doc.text}\n--- want ---\n${gp.expected}")
     }
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.gen.PagesGen
-import graft.model.{ExtractedPage, PageRow}
+import graft.model.PageRow
 import graft.pipeline.{ExtractJob, ExtractPipeline, Ledger}
 import org.apache.spark.sql.functions._
 
@@ -13,10 +13,9 @@ class PipelineSpec extends SparkTestBase {
 
   test("extract pipeline: byte-identical text for every corpus url") {
     val corpus = PagesGen.corpus(300, seed = 42L)
-    val metrics = new ExtractPipeline.Metrics(spark)
     val out = ExtractPipeline
       .extract(spark, corpus.map(_.row).toDS().toDF(),
-        ExtractPipeline.Conf(repartition = 8), metrics)
+        ExtractPipeline.Conf(repartition = 8))
       .collect()
       .map(d => d.url -> d).toMap
     assert(out.size == corpus.size)
@@ -32,8 +31,6 @@ class PipelineSpec extends SparkTestBase {
         last = s.end
       }
     }
-    assert(metrics.docsOk.value == corpus.size)
-    assert(metrics.docsFailed.value == 0)
   }
 
   test("expression fast path matches the typed pipeline's text per url (null = failure shape)") {
@@ -46,6 +43,50 @@ class PipelineSpec extends SparkTestBase {
       // exact shape: empty rows → null, everything else → the golden text
       val expected = if (gp.kind == "empty") None else Some(gp.expected)
       assert(fast(gp.row.url) == expected, s"${gp.kind} ${gp.row.url}")
+    }
+
+    // adversarial rows: every surface runs the same per-row dispatch
+    // (ExtractKernel.extract), so they agree on transports, PDFs,
+    // failures and the size cap
+    def row(url: String, html: Array[Byte], text: String = "") =
+      PageRow(url, new java.sql.Timestamp(0), html, text, "en")
+    val html = PagesGen.htmlPage(Seq("transport wrapped main content"), None, 3L)
+      .getBytes("UTF-8")
+    val small = Seq(
+      row("a://gzip-html", PagesGen.deflateGzip(html)),
+      row("a://zstd-pdf", com.github.luben.zstd.Zstd.compress(
+        PagesGen.pdfBytes(Seq(Seq("pdf inside zstd")), compress = true), 3)),
+      row("a://pdf-3-pages", PagesGen.pdfBytes(
+        Seq(Seq("page one"), Seq("page two", "second line"), Seq("page three")),
+        compress = false)),
+      row("a://corrupt-gzip", PagesGen.deflateGzip(html).take(8)),
+      row("a://corrupt-zstd", com.github.luben.zstd.Zstd.compress(html, 3).take(6)),
+      row("a://pdf-no-streams", "%PDF-1.4 no streams".getBytes("UTF-8"), "crawl text"),
+      row("a://empty-with-text", Array.emptyByteArray, "crawl text"),
+      row("a://empty-no-text", Array.emptyByteArray))
+    val maxBytes = small.map(_.html.length).max
+    val rows = small :+ row("a://over-cap", html ++ Array.fill[Byte](maxBytes)(' '))
+    val adv = rows.toDS().toDF()
+    val conf = ExtractPipeline.Conf(repartition = 4, maxBytes = maxBytes)
+    val typed = ExtractPipeline.extract(spark, adv, conf).collect().map(d => d.url -> d).toMap
+    val text = ExtractPipeline.extractText(spark, adv, conf)
+      .collect().map(r => r.getAs[String]("url") -> Option(r.getAs[String]("text"))).toMap
+    graft.functions.ExtractDoc.register(spark)
+    val expr = adv.selectExpr("url", "length(html) AS n", "extract_doc(html) AS d",
+        "extract_main_text(html) AS t")
+      .collect().map(r => r.getString(0) -> r).toMap
+    assert(typed.keySet == rows.map(_.url).toSet && text.keySet == typed.keySet)
+    assert(typed("a://pdf-3-pages").page_count == 3)
+    rows.foreach { r =>
+      val u = r.url
+      val d = typed(u)
+      // the fast path's null is both "failed" and "nothing" (kind empty)
+      val want = if (d.error != null || d.doc_kind == "empty") None else Some(d.text)
+      assert(text(u) == want, s"$u: typed ${d.doc_kind} ${d.error}")
+      val e = expr(u)
+      val doc = e.getStruct(2)
+      if (e.getInt(1) > 0) assert(doc.getString(2) == d.doc_kind, u)
+      assert(Option(e.getString(3)) == Option(doc.getString(0)), u)
     }
   }
 
@@ -95,32 +136,37 @@ class PipelineSpec extends SparkTestBase {
     assert(out.values.forall(_.text == ""))
   }
 
-  test("relational rollupPages: page order by page_no, not arrival order") {
-    val pages = Seq(
-      ExtractedPage("u://d", 1, new java.sql.Timestamp(0), "pdf", "second", Seq(), null),
-      ExtractedPage("u://d", 0, new java.sql.Timestamp(0), "pdf", "first", Seq(), null),
-      ExtractedPage("u://d", 2, new java.sql.Timestamp(0), "pdf", "third", Seq(), null))
-    val df = ExtractPipeline.rollupPages(pages.toDS().toDF())
-    val r = df.collect().head
-    assert(r.getAs[Int]("page_count") == 3)
-    assert(r.getAs[String]("text") == "first\nsecond\nthird")
-  }
-
   test("extract job: day-partitioned write + ledger commit + resume skips committed days") {
     val outDir = tmpDir("graft-out")
     val ledgerDir = tmpDir("graft-ledger")
-    val pages = corpusDf(200).cache()
+    // 200 golden corpus rows plus one that fails (pdf_empty), so the
+    // failed count is not trivially 0
+    val bad = PageRow("https://bad.example/pdf", new java.sql.Timestamp(1735693200000L),
+      "%PDF-1.4 no streams".getBytes("UTF-8"), "", "en")
+    val pages = corpusDf(200).union(Seq(bad).toDS().toDF()).cache()
+
+    // a run's counts equal the rows of the ledger entries it committed
+    // (one snapshot id per run) and the per-day stats it reports
+    def reconciles(r: ExtractJob.Result): Unit = {
+      val snap = Ledger.currentSnapshot(ledgerDir)
+      val ledgerRows =
+        Ledger.committed(ledgerDir).values.filter(_.snapshot == snap).map(_.rows).sum
+      assert(r.docsOk + r.docsFailed == r.daysProcessed.map(_.rows).sum)
+      assert(r.docsOk + r.docsFailed == ledgerRows)
+      assert(r.docsFailed == r.daysProcessed.map(_.errors).sum)
+    }
 
     val r1 = ExtractJob.run(spark, pages, outDir, ledgerDir,
       ExtractPipeline.Conf(repartition = 4))
     assert(r1.daysProcessed.nonEmpty)
-    assert(r1.docsOk + r1.docsFailed == 200)
+    assert(r1.docsOk == 200 && r1.docsFailed == 1)
+    reconciles(r1)
     val full = spark.read.parquet(outDir).orderBy("url").collect()
-    assert(full.length == 200)
+    assert(full.length == 201)
 
     val committed1 = Ledger.committed(ledgerDir)
     assert(committed1.size == r1.daysProcessed.size)
-    assert(committed1.values.map(_.rows).sum == 200)
+    assert(committed1.values.map(_.rows).sum == 201)
 
     // rerun with everything committed: nothing recomputed
     val r2 = ExtractJob.run(spark, pages, outDir, ledgerDir,
@@ -143,10 +189,11 @@ class PipelineSpec extends SparkTestBase {
     // only uncommitted days were recomputed
     val droppedRows = committed1.filter(e => dropped.contains(e._1)).values.map(_.rows).sum
     assert(r3.docsOk + r3.docsFailed == droppedRows)
+    reconciles(r3)
 
     // final table identical to an uninterrupted run
     val after = spark.read.parquet(outDir).orderBy("url").collect()
-    assert(after.length == 200)
+    assert(after.length == 201)
     assert(after.map(_.getAs[String]("url")).sameElements(full.map(_.getAs[String]("url"))))
     assert(after.map(_.getAs[String]("text")).sameElements(full.map(_.getAs[String]("text"))))
     pages.unpersist()
