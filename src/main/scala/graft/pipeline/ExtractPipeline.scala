@@ -128,17 +128,26 @@ object ExtractPipeline {
     * typed path) all map to null. Crawl-provided `text` surfaces ONLY for
     * rows with no html bytes (the passthrough branch), never as a
     * fallback for failed extraction — same branch the typed path takes.
+    * A transport-wrapped empty body (gzip of nothing) has no payload
+    * either, so it takes that branch too; the kernel's `passthrough` kind
+    * tells it apart from a failure, asked only on rows whose text came
+    * back null while crawl text is present.
     */
   def extractText(spark: SparkSession, pages: DataFrame, conf: Conf = Conf()): DataFrame = {
     graft.functions.ExtractMainText.register(spark) // idempotent
+    graft.functions.ExtractDoc.register(spark)
     val htmlLen = coalesce(length(col("html")), lit(0))
+    val crawl = when(col("text") =!= "", col("text"))
+    val noPayload = call_function("extract_doc", col("html")).getField("kind") ===
+      ExtractKernel.KindPassthrough
     val input = if (conf.postShuffle) pages else keyedBy(pages, conf)
     val out = input
       .select(
         col("url"), col("warc_ts"), col("lang"),
-        when(htmlLen === 0, when(col("text") =!= "", col("text")))
+        when(htmlLen === 0, crawl)
           .otherwise(when(htmlLen <= conf.maxBytes,
-            call_function("extract_main_text", col("html"))))
+            coalesce(call_function("extract_main_text", col("html")),
+              when(crawl.isNotNull && noPayload, crawl))))
           .as("text"))
       .withColumn("n_chars", coalesce(length(col("text")), lit(0)))
     if (conf.postShuffle) keyedBy(out, conf) else out

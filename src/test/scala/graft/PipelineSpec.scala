@@ -62,6 +62,7 @@ class PipelineSpec extends SparkTestBase {
       row("a://corrupt-gzip", PagesGen.deflateGzip(html).take(8)),
       row("a://corrupt-zstd", com.github.luben.zstd.Zstd.compress(html, 3).take(6)),
       row("a://pdf-no-streams", "%PDF-1.4 no streams".getBytes("UTF-8"), "crawl text"),
+      row("a://gzip-empty-with-text", PagesGen.deflateGzip(Array.emptyByteArray), "crawl text"),
       row("a://empty-with-text", Array.emptyByteArray, "crawl text"),
       row("a://empty-no-text", Array.emptyByteArray))
     val maxBytes = small.map(_.html.length).max
@@ -155,6 +156,14 @@ class PipelineSpec extends SparkTestBase {
       assert(r.docsOk + r.docsFailed == ledgerRows)
       assert(r.docsFailed == r.daysProcessed.map(_.errors).sum)
     }
+    // names and mtimes of each day dir's files: a day the job recomputes
+    // is rewritten with new part files, so an unchanged listing shows the
+    // resume filter kept that day away from the kernel
+    def dayFiles(days: Iterable[String]): Map[String, Set[(String, Long)]] =
+      days.map { d =>
+        val files = Option(new java.io.File(s"$outDir/$d").listFiles()).getOrElse(Array.empty)
+        d -> files.map(f => f.getName -> f.lastModified()).toSet
+      }.toMap
 
     val r1 = ExtractJob.run(spark, pages, outDir, ledgerDir,
       ExtractPipeline.Conf(repartition = 4))
@@ -169,10 +178,13 @@ class PipelineSpec extends SparkTestBase {
     assert(committed1.values.map(_.rows).sum == 201)
 
     // rerun with everything committed: nothing recomputed
+    val files1 = dayFiles(committed1.keys)
+    assert(files1.values.forall(_.nonEmpty))
     val r2 = ExtractJob.run(spark, pages, outDir, ledgerDir,
       ExtractPipeline.Conf(repartition = 4))
     assert(r2.daysProcessed.isEmpty)
-    assert(r2.docsOk == 0 && r2.docsFailed == 0) // kernel never ran
+    assert(r2.docsOk == 0 && r2.docsFailed == 0)
+    assert(dayFiles(committed1.keys) == files1) // no day rewritten
 
     // kill-and-restart: drop half the ledger, delete those day dirs
     val days = committed1.keys.toSeq.sorted
@@ -183,9 +195,12 @@ class PipelineSpec extends SparkTestBase {
       if (dir.isDirectory) dir.listFiles().foreach(_.delete())
       dir.delete()
     }
+    val kept = days.filterNot(dropped.contains)
+    val files3 = dayFiles(kept)
     val r3 = ExtractJob.run(spark, pages, outDir, ledgerDir,
       ExtractPipeline.Conf(repartition = 4))
     assert(r3.daysProcessed.map(s => s"p_day=${s.day}").toSet == dropped.toSet)
+    assert(dayFiles(kept) == files3) // still-committed days not rewritten
     // only uncommitted days were recomputed
     val droppedRows = committed1.filter(e => dropped.contains(e._1)).values.map(_.rows).sum
     assert(r3.docsOk + r3.docsFailed == droppedRows)
